@@ -484,16 +484,19 @@ def simhash(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64,
     token_hash: str = "md5",
 ) -> DataFrame:
-    """64-bit SimHash per doc: bit b of the result is the majority vote of
-    bit b of the per-token hash across tokens. One groupBy over exploded
-    tokens; the 64 conditional sums stay in one whole-stage-codegen'd
-    aggregate.
+    """SimHash per doc over the low ``bits`` (1..64) bits of the token
+    hash: bit b of the result is the majority vote of bit b across the
+    doc's tokens. One groupBy over exploded tokens; each bit is a
+    branchless sum of the extracted bit compared with the token count,
+    and the whole aggregate is one SQL expression parsed JVM-side.
 
     ``token_hash="md5"`` (default) derives the 64-bit token hash from the
     first 16 hex chars of md5 via ``conv(_, 16, -10)`` — reproducible in
     any engine with md5 (the DuckDB oracle runs the identical formula).
     ``"xxhash64"`` is the cheaper JVM-intrinsic variant for production
     runs that don't need cross-engine reproducibility."""
+    if not 1 <= bits <= 64:
+        raise ValueError(f"bits must be in [1, 64], got {bits}")
     if token_hash == "md5":
         h = F.conv(F.substring(F.md5("tok"), 1, 16), 16, -10).cast("long")
     elif token_hash == "xxhash64":

@@ -30,6 +30,7 @@ import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,7 +38,7 @@ from pyspark.sql import types as T
 from ..config import ConverterConfig, IdentifierRule
 from ..operators.extract import convert_stream
 from ..plans.registry import SchemaRegistry
-from .sink import BucketedMergeSink
+from .sink import BucketedMergeSink, fold_on_driver
 
 TARGET_COLS = ("repo", "path", "commit", "lang", "content")
 
@@ -63,10 +64,9 @@ def default_config() -> ConverterConfig:
 
 
 def infer_envelope_schema_from_sample(spark: SparkSession, sample_json: str) -> T.StructType:
-    """One envelope string -> StructType (driver-side compile step)."""
-    ddl = spark.range(1).select(
-        F.schema_of_json(F.lit(sample_json)).alias("s")
-    ).collect()[0]["s"]
+    """One envelope string -> StructType (driver-side compile step; the
+    constant ``schema_of_json`` folds on the driver, so no Spark job)."""
+    ddl = fold_on_driver(spark, F.schema_of_json(F.lit(sample_json)))[0]
     dt = T._parse_datatype_string(ddl)
     if not isinstance(dt, T.StructType):
         raise ValueError(f"envelope root must be a struct, got {ddl}")
@@ -76,44 +76,31 @@ def infer_envelope_schema_from_sample(spark: SparkSession, sample_json: str) -> 
 def infer_envelope_schemas_batch(
     spark: SparkSession, samples: list[str]
 ) -> list[T.StructType]:
-    """All samples' schemas in ONE Spark job: a single ``range(1)`` row
-    computes ``schema_of_json`` per sample as columns. The per-sample
-    form costs one driver round-trip EACH (up to 6/epoch) — pure serial
-    time that Amdahl charges against scaling efficiency on small
-    executors counts; batching makes it one round-trip per epoch.
-    Unparseable samples yield no entry (same skip semantics as the
-    caller's old try/except)."""
+    """All samples' schemas in ONE driver-side fold: ``schema_of_json``
+    of each sample as a constant column, evaluated by the optimizer
+    without submitting a Spark job. Samples that are not JSON objects
+    yield no entry. A corrupt sample makes the JSON parser raise while
+    the batch folds; the samples are then folded one by one so the good
+    ones still observe (the rare path — corrupt envelopes are already
+    filtered to the quarantine channel before they win a sample)."""
     if not samples:
         return []
     try:
-        row = spark.range(1).select(
-            *[F.schema_of_json(F.lit(s)).alias(f"_s{i}") for i in range(len(samples))]
-        ).collect()[0]
-        ddls = list(row)
-    except Exception:  # noqa: BLE001 — a corrupt sample fails the whole
-        # batched job; fall back to per-sample jobs so good samples
-        # still observe (the rare path — corrupt envelopes are already
-        # filtered to the quarantine channel before they win a sample)
+        ddls = list(fold_on_driver(
+            spark, *[F.schema_of_json(F.lit(s)) for s in samples]
+        ))
+    except Py4JJavaError:
         ddls = []
         for s in samples:
             try:
-                ddls.append(
-                    spark.range(1)
-                    .select(F.schema_of_json(F.lit(s)).alias("s"))
-                    .collect()[0][0]
-                )
-            except Exception:  # noqa: BLE001
-                ddls.append(None)
+                ddls.append(fold_on_driver(spark, F.schema_of_json(F.lit(s)))[0])
+            except Py4JJavaError:
+                continue  # corrupt sample: skip
     out = []
     for ddl in ddls:
-        if ddl is None:
-            continue
-        try:
-            dt = T._parse_datatype_string(ddl)
-            if isinstance(dt, T.StructType):
-                out.append(dt)
-        except Exception:  # noqa: BLE001 — unparseable: skip
-            continue
+        dt = T._parse_datatype_string(ddl)
+        if isinstance(dt, T.StructType):
+            out.append(dt)
     return out
 
 
@@ -385,7 +372,7 @@ def ingest(
     filter path gets the same effect from parquet min/max pruning.
     ``pipeline_observe`` (default on) prefetches the NEXT epoch's
     envelope samples and schema inference on a second job-submission
-    thread while the current epoch's merge runs, removing ~3 driver
+    thread while the current epoch's merge runs, removing its driver
     round-trips of serial time per epoch; parity-tested byte-identical
     to the serial form (test_pipelined_observe_parity).
     ``epoch_offset``/``lsn_lo`` shift the epoch ids and the LSN window
@@ -443,11 +430,11 @@ def ingest(
         samples = observe_envelope_samples_pruned(batch, "value_json", "lsn")
         return infer_envelope_schemas_batch(spark, samples)
 
-    # Observation pipelining: the sample-pick/point-fetch/schema_of_json
-    # jobs for epoch k+1 are read-only on the source, so they can run on a
-    # second job-submission thread WHILE epoch k's merge occupies the
-    # cluster — 3 driver round-trips of pure serial time per epoch move off
-    # the critical path. Ordering is preserved where it matters: the
+    # Observation pipelining: the sample-pick/point-fetch jobs and the
+    # schema fold for epoch k+1 are read-only on the source, so they can
+    # run on a second job-submission thread WHILE epoch k's merge occupies
+    # the cluster — their driver round-trips of pure serial time per epoch
+    # move off the critical path. Ordering is preserved where it matters: the
     # prefetch only COMPUTES the inferred schemas; registry.observe still
     # happens on this thread in epoch order, so the registry snapshot
     # committed with epoch k reflects exactly epochs <= k (a crash/resume

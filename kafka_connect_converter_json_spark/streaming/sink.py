@@ -43,8 +43,9 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.dedup import lww_latest, lww_latest_salted
 
@@ -212,6 +213,59 @@ def _bloom_tuple_maybe_contains(entry: dict, values: tuple) -> bool:
     return _bloom_bits_contain(entry, b"\x1f".join(parts))
 
 
+def fold_on_driver(spark: SparkSession, *cols: "F.Column") -> Row:
+    """Evaluate constant expressions over a one-row local relation. The
+    optimizer folds them into a ``LocalTableScan``, so collecting the row
+    submits no Spark job — where ``spark.range(1)`` costs one job of
+    scheduling round-trips per call."""
+    return spark.sql("VALUES (1)").select(
+        *[c.alias(f"_c{i}") for i, c in enumerate(cols)]
+    ).collect()[0]
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable —
+    the form a parquet read returns whatever the writer declared."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _widen(old: T.DataType | None, new: T.DataType) -> T.DataType:
+    """Additive schema widening, the rule a ``mergeSchema`` parquet read
+    applies across files: ``old``'s fields keep their order, fields only
+    ``new`` carries are appended, and structs (also inside arrays and
+    maps) widen recursively. A leaf whose type changed takes ``new``'s
+    type (the parquet reader widens int to bigint on read)."""
+    if old is None:
+        return new
+    if isinstance(old, T.StructType) and isinstance(new, T.StructType):
+        by_name = {f.name: f for f in new.fields}
+        fields = [
+            f if f.name not in by_name else T.StructField(
+                f.name, _widen(f.dataType, by_name[f.name].dataType), True,
+                f.metadata,
+            )
+            for f in old.fields
+        ]
+        have = set(old.fieldNames())
+        return T.StructType(fields + [f for f in new.fields if f.name not in have])
+    if isinstance(old, T.ArrayType) and isinstance(new, T.ArrayType):
+        return T.ArrayType(_widen(old.elementType, new.elementType), True)
+    if isinstance(old, T.MapType) and isinstance(new, T.MapType):
+        return T.MapType(
+            _widen(old.keyType, new.keyType), _widen(old.valueType, new.valueType), True
+        )
+    return new
+
+
 def classify_state_diff(
     old: DataFrame,
     new: DataFrame,
@@ -312,6 +366,30 @@ def classify_state_diff(
 
 
 class BucketedMergeSink:
+    """Bucketed MERGE sink over parquet, committed through one manifest.
+
+    Manifest fields: the layout (``keys``, ``order_col``,
+    ``num_buckets``, ``merge_mode``, ``bucket_cols``), the live state
+    (``buckets``: bucket id -> base dir, ``deltas``: pending MOR delta
+    dirs), ``epochs`` (one snapshot entry per committed epoch) and the
+    table schema:
+
+    - ``schemas``: append-only list of table schemas in Spark JSON, one
+      entry per distinct widened schema, so it grows with schema
+      evolutions, not with epochs. A table schema is the live row
+      columns (keys, ``order_col``, payload); MOR delta files carry
+      ``op_col`` as well, and delta reads add it.
+    - ``schema_id``: index into ``schemas`` of the live state's schema,
+      at top level and in every epoch snapshot entry.
+
+    Every writer records the schema of the frame it writes, widened over
+    the live one (columns are only ever added), and every read of the
+    sink's data files is planned from the snapshot's recorded schema
+    instead of parquet footers. A manifest without ``schemas`` (written
+    before schemas were recorded) gets each snapshot's schema from its
+    footers once, cached in memory; its next commit records one.
+    """
+
     def __init__(
         self,
         spark: SparkSession,
@@ -404,6 +482,10 @@ class BucketedMergeSink:
             )
         self.bucket_cols = cols
         self._writer = manifest_writer or ManifestWriter()
+        # parsed ``schemas`` entries by JSON text, and footer-inferred
+        # schemas of legacy snapshots by their file list
+        self._parsed_schemas: dict[str, T.StructType] = {}
+        self._footer_schemas: dict[tuple[str, ...], T.StructType] = {}
         os.makedirs(root, exist_ok=True)
         self._manifest = self._load_manifest()
 
@@ -466,6 +548,7 @@ class BucketedMergeSink:
             "epochs": [],
             "buckets": {},
             "deltas": [],
+            "schemas": [],
         }
 
     def _commit_manifest(self, manifest: dict) -> None:
@@ -494,24 +577,84 @@ class BucketedMergeSink:
             F.xxhash64(*[F.col(k) for k in self.bucket_cols]), F.lit(self.num_buckets)
         )
 
-    def _key_types(self) -> dict:
-        """Stored dtype of each key column, from one committed parquet
-        footer (cached). xxhash64 is TYPE-sensitive — lit(5) is an int32
-        and hashes to a different bucket than a bigint column holding 5 —
-        so point-lookup literals must be cast to the stored type before
-        bucketing."""
-        cached = getattr(self, "_key_types_cache", None)
-        if cached is not None:
-            return cached
-        rels = list(self._manifest["buckets"].values()) or list(
-            self._manifest.get("deltas", [])
+    # ----- table schema ----------------------------------------------------
+
+    def _snapshot_schema(self, snap: dict) -> T.StructType | None:
+        """Table schema of a snapshot: an epoch entry, or the manifest
+        itself for the live state. ``None`` for a snapshot with no data
+        files and no recorded schema. A snapshot without ``schema_id``
+        predates recorded schemas: its schema comes from a ``mergeSchema``
+        read of its footers, once per snapshot — the only footer read
+        left on the sink's read path."""
+        sid = snap.get("schema_id")
+        if sid is not None:
+            text = self._manifest["schemas"][int(sid)]
+            if text not in self._parsed_schemas:
+                self._parsed_schemas[text] = T.StructType.fromJson(json.loads(text))
+            return self._parsed_schemas[text]
+        rels = tuple(snap["buckets"].values()) + tuple(snap.get("deltas", []))
+        if not rels:
+            return None
+        if rels not in self._footer_schemas:
+            merged = self.spark.read.option("mergeSchema", "true").parquet(
+                *[os.path.join(self.root, r) for r in rels]
+            ).schema
+            self._footer_schemas[rels] = self._table_schema(merged)
+        return self._footer_schemas[rels]
+
+    def _table_schema(self, written: T.StructType) -> T.StructType:
+        """The table columns of a written frame's schema: without the
+        layout columns (``_bucket``, ``_slice``) and the delta ``op_col``."""
+        return _as_nullable(T.StructType([
+            f for f in written.fields
+            if f.name not in ("_bucket", "_slice", self.op_col)
+        ]))
+
+    def _delta_schema(self, schema: T.StructType) -> T.StructType:
+        """Read schema of MOR delta files: the table schema plus ``op_col``."""
+        return T.StructType(
+            schema.fields + [T.StructField(self.op_col, T.StringType(), True)]
         )
-        types: dict = {}
-        if rels:
-            schema = self.spark.read.parquet(os.path.join(self.root, rels[0])).schema
-            types = {f.name: f.dataType for f in schema.fields if f.name in self.keys}
-            self._key_types_cache = types  # only cache once data exists
-        return types
+
+    def _record_schema(
+        self, manifest: dict, entry: dict | None,
+        written: T.StructType | None = None, schema: T.StructType | None = None,
+    ) -> None:
+        """Set ``schema_id`` in ``manifest`` and in the epoch snapshot
+        ``entry`` (if any) to the schema of the state being committed:
+        ``schema`` when given, else the live schema widened by the
+        ``written`` frame schema (``None`` = no data file written).
+        Appends to ``schemas`` only a schema not recorded yet.
+        Driver-only: a frame's schema is known before it is written, so
+        recording it costs no Spark job."""
+        if schema is None:
+            schema = self._snapshot_schema(self._manifest)
+            if written is not None:
+                schema = _widen(schema, self._table_schema(written))
+        if schema is None:  # nothing written to an empty table yet
+            manifest.pop("schema_id", None)
+            return
+        text = schema.json()
+        schemas = list(manifest.get("schemas", []))
+        if text not in schemas:
+            schemas.append(text)
+        manifest["schemas"] = schemas
+        manifest["schema_id"] = schemas.index(text)
+        if entry is not None:
+            entry["schema_id"] = manifest["schema_id"]
+
+    def _read_files(self, rels: list[str], schema: T.StructType) -> DataFrame:
+        """Parquet read of sink data dirs/files planned from ``schema``:
+        no footer job, and columns a file lacks read as null."""
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.root, r) for r in rels]
+        )
+
+    def _empty_frame(self, schema: T.StructType | None) -> DataFrame:
+        if schema is None:
+            raise ValueError("sink is empty — no committed buckets or deltas")
+        # a zero limit plans as an empty local relation: no job to collect
+        return self.spark.createDataFrame([], schema).limit(0)
 
     def meta(self) -> dict:
         """Engine metadata committed atomically with epochs (e.g. the
@@ -629,6 +772,7 @@ class BucketedMergeSink:
         }
         manifest = dict(self._manifest)
         manifest["deltas"] = stats["deltas"]
+        self._record_schema(manifest, stats, to_write.schema if written else None)
         manifest["epochs"] = manifest["epochs"] + [stats]
         pending = getattr(self, "_pending_meta", None)
         if pending:
@@ -671,10 +815,8 @@ class BucketedMergeSink:
                 r["_bucket"]
                 for r in batch_b.select("_bucket").distinct().collect()
             )
-            current_paths = [
-                os.path.join(self.root, buckets_map[str(b)])
-                for b in touched
-                if str(b) in buckets_map
+            current_rels = [
+                buckets_map[str(b)] for b in touched if str(b) in buckets_map
             ]
         else:
             # no pruning: merge reads every live bucket; stats/lineage job
@@ -691,17 +833,17 @@ class BucketedMergeSink:
             stats_thread = threading.Thread(target=_stats, daemon=True)
             stats_thread.start()
             touched = sorted(int(b) for b in buckets_map)
-            current_paths = [os.path.join(self.root, rel) for rel in buckets_map.values()]
+            current_rels = list(buckets_map.values())
 
         cols = [*self.keys, self.order_col, self.op_col, *payload_cols, "_bucket"]
         sides = batch_b.select(*cols)
-        if current_paths:
-            # mergeSchema + allowMissingColumns: bucket files written before
-            # a schema evolution lack the new columns; they read back as
-            # null (additive-widening contract, SURVEY.md N2 / Iceberg
-            # ADD COLUMN semantics)
+        if current_rels:
+            # read under the live table schema + allowMissingColumns: bucket
+            # files written before a schema evolution lack the new columns;
+            # they read back as null (additive-widening contract, SURVEY.md
+            # N2 / Iceberg ADD COLUMN semantics)
             cur = (
-                self.spark.read.option("mergeSchema", "true").parquet(*current_paths)
+                self._read_files(current_rels, self._snapshot_schema(self._manifest))
                 .withColumn(self.op_col, F.lit("u"))
                 .withColumn("_bucket", self._bucket_expr())
             )
@@ -769,6 +911,7 @@ class BucketedMergeSink:
         }
         manifest = dict(self._manifest)
         manifest["buckets"] = buckets_map
+        self._record_schema(manifest, stats, to_write.schema if written else None)
         manifest["epochs"] = manifest["epochs"] + [stats]
         pending = getattr(self, "_pending_meta", None)
         if pending:
@@ -826,29 +969,28 @@ class BucketedMergeSink:
         self,
         base_rels: list[str],
         delta_rels: list[str],
+        schema: T.StructType | None,
         pre_filter=None,
     ) -> DataFrame:
         """Base ∪ deltas -> one live row per key (MOR read path): LWW by
         ``order_col`` across base rows (implicit op='u') and delta rows
         (op kept, op='d' winners mask the key), then drop tombstones.
-        ``pre_filter`` (a Column) is applied BEFORE the LWW reduce — only
-        sound for predicates on columns immutable across a key's versions
-        (the merge keys), where dropping rows cannot flip a winner; it
-        exists so ``read_where`` shuffles only matching keys."""
+        Both sides are read under the snapshot's table ``schema``, so
+        planning opens no footer. ``pre_filter`` (a Column) is applied
+        BEFORE the LWW reduce — only sound for predicates on columns
+        immutable across a key's versions (the merge keys), where
+        dropping rows cannot flip a winner; it exists so ``read_where``
+        shuffles only matching keys."""
         if not base_rels and not delta_rels:
             raise ValueError("sink is empty — no committed buckets or deltas")
-        rd = self.spark.read.option("mergeSchema", "true")
         parts = []
         if base_rels:
             parts.append(
-                rd.parquet(*[os.path.join(self.root, r) for r in base_rels])
-                .withColumn(self.op_col, F.lit("u"))
+                self._read_files(base_rels, schema).withColumn(self.op_col, F.lit("u"))
             )
         if delta_rels:
-            parts.append(rd.parquet(*[os.path.join(self.root, r) for r in delta_rels]))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
+            parts.append(self._read_files(delta_rels, self._delta_schema(schema)))
+        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         if pre_filter is not None:
             df = df.filter(pre_filter)
         if not delta_rels:
@@ -860,11 +1002,15 @@ class BucketedMergeSink:
         merged = lww_latest(df, self.keys, self.order_col, payload + [self.op_col])
         return merged.filter(F.col(self.op_col) != self.delete_op).drop(self.op_col)
 
-    def read(self) -> DataFrame:
+    def _snapshot_view(self, snap: dict) -> DataFrame:
+        """Live rows of a snapshot (an epoch entry, or the manifest)."""
         return self._merged_view(
-            list(self._manifest["buckets"].values()),
-            list(self._manifest.get("deltas", [])),
+            list(snap["buckets"].values()), list(snap.get("deltas", [])),
+            self._snapshot_schema(snap),
         )
+
+    def read(self) -> DataFrame:
+        return self._snapshot_view(self._manifest)
 
     def _bucket_lookup(
         self, cols: list[str], values: tuple, as_of: int | str | None
@@ -879,36 +1025,31 @@ class BucketedMergeSink:
         silently return no rows (the same trap the MOR changelog's
         candidate pruning guards against)."""
         as_of = self._resolve_epoch(as_of)
-        if as_of is None:
-            snap_buckets = self._manifest["buckets"]
-            snap_deltas = self._manifest.get("deltas", [])
-            snap_nb = self.num_buckets
-        else:
-            snap = self._snapshot(as_of)
-            snap_buckets = snap["buckets"]
-            snap_deltas = snap.get("deltas", [])
-            snap_nb = int(snap.get("num_buckets", self.num_buckets))
-        ktypes = self._key_types()
+        snap = self._manifest if as_of is None else self._snapshot(as_of)
+        snap_buckets = snap["buckets"]
+        snap_deltas = snap.get("deltas", [])
+        snap_nb = int(snap.get("num_buckets", self.num_buckets))
+        schema = self._snapshot_schema(snap)
+        # stored dtype of each key: xxhash64 is TYPE-sensitive — lit(5) is
+        # an int32 and hashes to a different bucket than a bigint column
+        # holding 5 — so lookup literals are cast to the stored type
+        ktypes = {f.name: f.dataType for f in schema.fields} if schema else {}
 
         def _klit(k, v):
             lit = F.lit(v)
             return lit.cast(ktypes[k]) if k in ktypes else lit
 
-        row = self.spark.range(1).select(
-            *[_klit(k, v).alias(k) for k, v in zip(cols, values)]
-        )
-        probe = F.pmod(
-            F.xxhash64(*[F.col(k) for k in self.bucket_cols]), F.lit(snap_nb)
-        )
-        bucket = str(row.select(probe.alias("b")).collect()[0].b)
+        # the probe is a constant expression: folded on the driver, no job
+        lits = {k: _klit(k, v) for k, v in zip(cols, values)}
+        bucket = str(fold_on_driver(self.spark, F.pmod(
+            F.xxhash64(*[lits[k] for k in self.bucket_cols]), F.lit(snap_nb)
+        ))[0])
         base = snap_buckets.get(bucket)
         deltas = [
             rel for rel in snap_deltas if rel.endswith(f"_bucket={bucket}")
         ]
         if base is None and not deltas:
-            # empty frame with that snapshot's live schema
-            empty_src = self.read_as_of(as_of) if as_of is not None else self.read()
-            return empty_src.limit(0)
+            return self._empty_frame(schema)
         rels = ([base] if base else []) + deltas
         if as_of is not None:
             self._require_rels(rels)  # vacuumed snapshot → clear error
@@ -954,11 +1095,8 @@ class BucketedMergeSink:
 
             base_rels, delta_rels = _prune(base_rels), _prune(delta_rels)
             if not base_rels and not delta_rels:
-                empty_src = (
-                    self.read_as_of(as_of) if as_of is not None else self.read()
-                )
-                return empty_src.limit(0)
-        df = self._merged_view(base_rels, delta_rels)
+                return self._empty_frame(schema)
+        df = self._merged_view(base_rels, delta_rels, schema)
         cond = None
         for k, v in zip(cols, values):
             eq = F.col(k) == _klit(k, v)
@@ -1012,12 +1150,9 @@ class BucketedMergeSink:
         ``vacuum``. A tag name (see ``tag()``) is accepted wherever an
         epoch id is — the ``VERSION AS OF 'tag'`` surface."""
         epoch = self._resolve_epoch(epoch)
-        for e in self._manifest["epochs"]:
-            if e["epoch"] == epoch:
-                return self._merged_view(
-                    list(e["buckets"].values()), list(e.get("deltas", []))
-                )
-        raise ValueError(f"epoch {epoch} is not committed")
+        if epoch is None:
+            raise ValueError("epoch None is not committed")
+        return self._snapshot_view(self._snapshot(epoch))
 
     # ----- named snapshot refs (tags) ------------------------------------
 
@@ -1166,6 +1301,7 @@ class BucketedMergeSink:
         manifest["buckets"] = dict(snap["buckets"])
         manifest["deltas"] = list(snap.get("deltas", []))
         manifest["num_buckets"] = snap_nb
+        self._record_schema(manifest, entry, schema=self._snapshot_schema(snap))
         manifest["epochs"] = manifest["epochs"] + [entry]
         manifest["maintenance"] = manifest.get("maintenance", []) + [
             {"op": "restore", "of_epoch": to_epoch, "as_epoch": as_epoch}
@@ -1243,6 +1379,7 @@ class BucketedMergeSink:
         manifest = dict(self._manifest)
         manifest["buckets"] = new_map
         manifest["deltas"] = []
+        self._record_schema(manifest, None, to_write.schema if new_map else None)
         maint = {"op": "compact", "deltas_folded": len(deltas), "dir": rel_dir}
         if zorder is not None:
             maint["zorder"] = list(zorder)
@@ -1550,24 +1687,41 @@ class BucketedMergeSink:
         expectations. An EMPTY staged epoch (a quiet LSN window) returns
         an empty frame with the recorded schema."""
         entry = self._staged_entry(epoch)
+        schema = self._staged_delta_schema(entry)
         if not entry["delta_rels"]:
-            from pyspark.sql import types as T
-
-            schema = T.StructType.fromJson(json.loads(entry["schema"]))
             return self.spark.createDataFrame([], schema).drop("_bucket")
-        return self.spark.read.parquet(
-            os.path.join(self.root, f"staged/e{epoch:06d}")
-        ).drop("_bucket")
+        return self._read_files([f"staged/e{epoch:06d}"], schema).drop("_bucket")
+
+    @staticmethod
+    def _staged_delta_schema(entry: dict) -> T.StructType:
+        """Schema of a staged delta as written (``_bucket`` and
+        ``op_col`` included), recorded in its staged entry."""
+        return T.StructType.fromJson(json.loads(entry["schema"]))
+
+    def _staged_view(self, epochs: list[int]) -> DataFrame:
+        """Candidate state with the staged ``epochs`` published: live base
+        + pending deltas + their staged deltas, under the live schema
+        widened by every staged delta that wrote files."""
+        schema = self._snapshot_schema(self._manifest)
+        rels: list[str] = []
+        for e in epochs:
+            entry = self._staged_entry(e)
+            if entry["delta_rels"]:
+                schema = _widen(
+                    schema, self._table_schema(self._staged_delta_schema(entry))
+                )
+                rels.extend(entry["delta_rels"])
+        return self._merged_view(
+            list(self._manifest["buckets"].values()),
+            list(self._manifest.get("deltas", [])) + rels,
+            schema,
+        )
 
     def read_staged(self, epoch: int) -> DataFrame:
         """The CANDIDATE table state: what ``read()`` would return if the
         staged epoch were published right now. Audits run real queries
         against this without any visibility side effect."""
-        entry = self._staged_entry(epoch)
-        return self._merged_view(
-            list(self._manifest["buckets"].values()),
-            list(self._manifest.get("deltas", [])) + list(entry["delta_rels"]),
-        )
+        return self._staged_view([epoch])
 
     def audit_staged(self, epoch: int, expectations: dict) -> dict:
         """Run declarative expectations against a staged epoch. Keys:
@@ -1698,13 +1852,7 @@ class BucketedMergeSink:
         under LWW. Valid because each staged delta is LWW-reduced and
         LWW is order-insensitive; audits run real queries here with no
         visibility side effect."""
-        rels: list[str] = []
-        for e in self._branch_epochs(name):
-            rels.extend(self._staged_entry(e)["delta_rels"])
-        return self._merged_view(
-            list(self._manifest["buckets"].values()),
-            list(self._manifest.get("deltas", [])) + rels,
-        )
+        return self._staged_view(self._branch_epochs(name))
 
     def audit_branch(self, name: str, expectations: dict) -> dict:
         """``audit_staged`` over a chain: delta-level expectations run
@@ -1820,6 +1968,10 @@ class BucketedMergeSink:
         }
         manifest = dict(self._manifest)
         manifest["deltas"] = stats["deltas"]
+        self._record_schema(
+            manifest, stats,
+            self._staged_delta_schema(entry) if entry["delta_rels"] else None,
+        )
         manifest["epochs"] = manifest["epochs"] + [stats]
         if entry["meta"]:
             manifest["meta"] = {**manifest.get("meta", {}), **entry["meta"]}
@@ -1854,6 +2006,7 @@ class BucketedMergeSink:
                 "num_buckets": self.num_buckets,
             }
             manifest = dict(self._manifest)
+            self._record_schema(manifest, stats)
             manifest["epochs"] = manifest["epochs"] + [stats]
             if entry["meta"]:
                 manifest["meta"] = {**manifest.get("meta", {}), **entry["meta"]}
@@ -1865,7 +2018,9 @@ class BucketedMergeSink:
             return {**stats, "published": True}
         # the staged delta IS a valid merge batch (keys + order + op +
         # payload; already one version per key — LWW is idempotent)
-        batch_b = self.spark.read.parquet(staged_dir)  # _bucket from layout
+        batch_b = self._read_files(  # _bucket from layout
+            [f"staged/e{epoch:06d}"], self._staged_delta_schema(entry)
+        )
         payload_cols = [
             c for c in batch_b.columns
             if c not in self.keys
@@ -1873,16 +2028,14 @@ class BucketedMergeSink:
         ]
         buckets_map = dict(self._manifest["buckets"])
         touched = list(entry["touched"])
-        current_paths = [
-            os.path.join(self.root, buckets_map[str(b)])
-            for b in touched
-            if str(b) in buckets_map
+        current_rels = [
+            buckets_map[str(b)] for b in touched if str(b) in buckets_map
         ]
         cols = [*self.keys, self.order_col, self.op_col, *payload_cols, "_bucket"]
         sides = batch_b.select(*cols)
-        if current_paths:
+        if current_rels:
             cur = (
-                self.spark.read.option("mergeSchema", "true").parquet(*current_paths)
+                self._read_files(current_rels, self._snapshot_schema(self._manifest))
                 .withColumn(self.op_col, F.lit("u"))
                 .withColumn("_bucket", self._bucket_expr())
             )
@@ -1929,6 +2082,7 @@ class BucketedMergeSink:
         }
         manifest = dict(self._manifest)
         manifest["buckets"] = buckets_map
+        self._record_schema(manifest, stats, to_write.schema if written else None)
         manifest["epochs"] = manifest["epochs"] + [stats]
         if entry["meta"]:
             manifest["meta"] = {**manifest.get("meta", {}), **entry["meta"]}
@@ -2546,22 +2700,15 @@ class BucketedMergeSink:
                         cond = term if cond is None else (cond & term)
             return cond
 
+        schema = self._snapshot_schema(self._manifest)
         if not base_files and not delta_files:
-            out = self.read().limit(0)  # every file pruned: empty, live schema
+            out = self._empty_frame(schema)  # every file pruned: live schema
         else:
             out = self._merged_view(
-                base_files, delta_files, pre_filter=_cond(key_preds)
+                base_files, delta_files, schema, pre_filter=_cond(key_preds)
             )
         other_cond = _cond(other_preds)
         return out.filter(other_cond) if other_cond is not None else out
-
-    def _snapshot_map(self, epoch: int | None) -> dict:
-        if epoch is None:
-            return {}
-        for e in self._manifest["epochs"]:
-            if e["epoch"] == epoch:
-                return dict(e["buckets"])
-        raise ValueError(f"epoch {epoch} is not committed")
 
     def read_changes(
         self,
@@ -2594,21 +2741,19 @@ class BucketedMergeSink:
         from_epoch = self._resolve_epoch(from_epoch)
         if self.merge_mode == "mor":
             return self._read_changes_mor(to_epoch, from_epoch, include_preimages)
-        fm, tm = self._snapshot_map(from_epoch), self._snapshot_map(to_epoch)
+        from_s, to_s = self._snapshot(from_epoch), self._snapshot(to_epoch)
+        fm = dict(from_s["buckets"]) if from_s is not None else {}
+        tm = dict(to_s["buckets"])
         f_items, t_items = set(fm.items()), set(tm.items())
         old_rels = [rel for b, rel in fm.items() if (b, rel) not in t_items]
         new_rels = [rel for b, rel in tm.items() if (b, rel) not in f_items]
 
-        def _read(rels: list[str]) -> DataFrame | None:
+        def _read(rels: list[str], snap: dict | None) -> DataFrame | None:
             if not rels:
                 return None
-            return (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*[os.path.join(self.root, r) for r in rels])
-                .drop("_bucket")
-            )
+            return self._read_files(rels, self._snapshot_schema(snap))
 
-        old, new = _read(old_rels), _read(new_rels)
+        old, new = _read(old_rels, from_s), _read(new_rels, to_s)
         if old is None and new is None:
             raise ValueError("snapshots are identical — no changed buckets")
         ct = "_change_type"
@@ -2677,9 +2822,7 @@ class BucketedMergeSink:
             # is an insert. MUST use the full snapshot (base + deltas) —
             # a compact() earlier in history folds deltas into the base,
             # so "just the delta dirs" would silently miss those rows.
-            state = self._merged_view(
-                list(to_s["buckets"].values()), to_deltas
-            )
+            state = self._snapshot_view(to_s)
             payload = [
                 c for c in state.columns
                 if c not in self.keys and c != self.order_col
@@ -2708,22 +2851,15 @@ class BucketedMergeSink:
                 list(from_buckets.values()) + from_deltas
                 + list(to_s["buckets"].values()) + to_deltas
             )
-            old_state = self._merged_view(
-                list(from_buckets.values()), from_deltas
-            )
-            new_state = self._merged_view(
-                list(to_s["buckets"].values()), to_deltas
-            )
             return self._classify_state_diff(
-                old_state, new_state, include_preimages
+                self._snapshot_view(from_s), self._snapshot_view(to_s),
+                include_preimages,
             )
         new_rels = [r for r in to_deltas if r not in set(from_deltas)]
         if not new_rels:
             raise ValueError("snapshots are identical — no new deltas")
         self._require_rels(new_rels + list(from_buckets.values()) + from_deltas)
-        d = self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.root, r) for r in new_rels]
-        )
+        d = self._read_files(new_rels, self._delta_schema(self._snapshot_schema(to_s)))
         payload = [
             c for c in d.columns
             if c not in self.keys and c not in (self.order_col, self.op_col)
@@ -2777,7 +2913,9 @@ class BucketedMergeSink:
                     *payload,
                 )
             )
-        prior = self._merged_view(base_rels, delta_rels)
+        prior = self._merged_view(
+            base_rels, delta_rels, self._snapshot_schema(from_s)
+        )
         p = prior.select(
             *[F.col(k).alias(f"_pk_{k}") for k in self.keys],
             F.col(self.order_col).alias("_p_ord"),
@@ -2878,12 +3016,10 @@ class BucketedMergeSink:
         bucket = F.pmod(
             F.xxhash64(*[F.col(k) for k in self.bucket_cols]), F.lit(new_num_buckets)
         )
-        (
-            current.withColumn("_bucket", bucket)
-            .repartition(new_num_buckets, "_bucket")
-            .write.partitionBy("_bucket")
-            .parquet(out_dir)
+        to_write = current.withColumn("_bucket", bucket).repartition(
+            new_num_buckets, "_bucket"
         )
+        to_write.write.partitionBy("_bucket").parquet(out_dir)
         new_map = {
             d.split("=", 1)[1]: f"{rel_dir}/{d}"
             for d in os.listdir(out_dir)
@@ -2892,6 +3028,7 @@ class BucketedMergeSink:
         manifest = dict(self._manifest)
         manifest["buckets"] = new_map
         manifest["num_buckets"] = new_num_buckets
+        self._record_schema(manifest, None, to_write.schema if new_map else None)
         # read() above already folded any pending MOR deltas into the
         # rewrite; leaving them listed would only re-apply no-ops
         manifest["deltas"] = []

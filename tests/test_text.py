@@ -250,3 +250,18 @@ def test_ngram_jaccard_chunked_pairs_equivalent(spark):
     assert len(big) == 45  # all C(10,2) pairs share the base shingles
     assert result(3) == big   # chunked: 4 chunks of <=3, ragged tail
     assert result(1) == big   # degenerate: all-cross-chunk
+
+
+@pytest.mark.parametrize("bits", [0, -1, 65])
+def test_simhash_rejects_bits_outside_1_to_64(spark, bits):
+    df = spark.createDataFrame([(1, "alpha beta")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="bits"):
+        td.simhash(df, bits=bits)
+
+
+def test_simhash_low_bits_match_reference_votes(spark):
+    """``bits < 64`` keeps the low bits of the 64-bit signature."""
+    df = spark.createDataFrame([(1, "alpha beta gamma")], ["doc_id", "text"])
+    full = td.simhash(df).collect()[0].simhash
+    low = td.simhash(df, bits=8).collect()[0].simhash
+    assert low == full & 0xFF
