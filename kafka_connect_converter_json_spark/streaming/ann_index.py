@@ -32,11 +32,8 @@ embedding-side twin of the N21 LSH index:
   — at 10^10 rows this is the difference between reading
   nprobe/n_centroids of the index and all of it.
 
-Exactly-once through the same atomic-manifest CAS as the sink/view/LSH
-index (state dirs written first, manifest swap is the commit point;
-stale or redelivered refresh is a committed no-op; orphan dirs from a
-crash are overwritten on retry and collectable by ``vacuum``).
-``compact()`` folds deltas into a base exactly like the sink's MOR path.
+Lifecycle (exactly-once commit, ``compact()``, ``vacuum()``):
+``derived.DeltaIndex``.
 
 Invariant (tested): after any epoch, ``read_assignments()`` equals the
 batch nearest-centroid assignment of the sink's live docs under the
@@ -47,22 +44,22 @@ brute-force cosine top-k).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.similarity import _sq_dist, cosine
-from .sink import BucketedMergeSink, ConcurrentCommitError, ManifestWriter
+from .derived import KEY_SEP, DeltaIndex  # noqa: F401 (KEY_SEP re-exported)
+from .sink import BucketedMergeSink
 
 IDX_MANIFEST = "_ann_index_manifest.json"
-# ASCII unit separator: joins composite sink keys into the index's doc id
-KEY_SEP = "\x1f"
 
 
-class IncrementalANNIndex:
+class IncrementalANNIndex(DeltaIndex):
+    MANIFEST = IDX_MANIFEST
+    _PARAMS_OF = "embedding/codebook"
+    _UNCHANGED = {"rows": 0}
+
     def __init__(
         self,
         spark: SparkSession,
@@ -73,7 +70,6 @@ class IncrementalANNIndex:
         vec_tag: str = "default",
         n_centroids: int = 16,
         lloyd_rounds: int = 0,
-        manifest_writer: ManifestWriter | None = None,
     ) -> None:
         """``vec_expr`` maps a changelog row's payload columns to the
         ``array<float/double>`` embedding (default: ``F.col(vec_col)``
@@ -84,29 +80,12 @@ class IncrementalANNIndex:
         expression in the manifest so a reopen with a different
         embedding rule is refused (expressions aren't serializable —
         the tag is the caller's contract)."""
-        self.spark = spark
-        self.root = root
-        self.sink = sink
         self.vec_expr = vec_expr if vec_expr is not None else F.col(vec_col)
         self.vec_tag = vec_tag
         self.n_centroids = n_centroids
         self.lloyd_rounds = lloyd_rounds
-        self._writer = manifest_writer or ManifestWriter()
-        os.makedirs(root, exist_ok=True)
-        self._manifest = self._writer.read(os.path.join(root, IDX_MANIFEST)) or {
-            "version": 0,
-            "last_epoch": None,
-            "base": None,
-            "deltas": [],
-            "centroids": None,  # trained at the bootstrap refresh
-            "params": self._params(),
-        }
-        if self._manifest["params"] != self._params():
-            raise ValueError(
-                "index exists with different embedding/codebook params "
-                f"{self._manifest['params']}; reopen with those "
-                f"(got {self._params()})"
-            )
+        # the codebook is trained at the bootstrap refresh
+        super().__init__(spark, root, sink, centroids=None)
 
     def _params(self) -> dict:
         return {
@@ -124,7 +103,7 @@ class IncrementalANNIndex:
     def _vec_rows(self, docs: DataFrame) -> DataFrame:
         """(id, vec) rows for one payload version per key."""
         return docs.select(
-            F.concat_ws(KEY_SEP, *[F.col(k) for k in self.sink.keys]).alias("_id"),
+            self._doc_id().alias("_id"),
             self.vec_expr.cast("array<double>").alias("_v"),
         ).filter(F.col("_v").isNotNull())
 
@@ -145,74 +124,22 @@ class IncrementalANNIndex:
 
     # ----- state reads -------------------------------------------------------
 
-    def _state_dirs(self) -> list[str]:
-        rels = ([self._manifest["base"]] if self._manifest["base"] else []) + list(
-            self._manifest["deltas"]
-        )
-        return [os.path.join(self.root, rel) for rel in rels]
-
-    # explicit schema: an all-netted-out delta writes an EMPTY
-    # partitioned dir (no part files), which schema inference refuses
     _VEC_SCHEMA = "id string, vec array<double>, _n bigint, _cell int"
 
-    def _raw(
-        self, dirs: list[str], cells: list[int] | None = None
-    ) -> DataFrame | None:
-        """Union of state dirs, each under its OWN basePath (the
-        ``_cell=`` partition layout is per-dir). ``cells`` prunes at the
-        PATH level — only the probed cells' ``_cell=`` subdirectories
-        are listed/read at all (the sink's bucket-dir idiom), so a
-        search never touches the unprobed (n_centroids - nprobe)/
-        n_centroids of the index, footers included."""
-        if not dirs:
-            return None
-        parts = []
-        for d in dirs:
-            if cells is None:
-                paths = [d]
-            else:
-                paths = [
-                    p
-                    for c in cells
-                    if os.path.isdir(p := os.path.join(d, f"_cell={c}"))
-                ]
-                if not paths:
-                    continue
-            parts.append(
-                self.spark.read.schema(self._VEC_SCHEMA)
-                .option("basePath", d)
-                .parquet(*paths)
-            )
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _live(self, dirs: list[str], cells: list[int] | None = None) -> DataFrame:
+    def _live(self, cells: list[int] | None = None) -> DataFrame:
         """sum(count) > 0 per (id, cell, vec). ``cells`` prunes the scan
-        to the probed cells' partition dirs."""
-        raw = self._raw(dirs, cells)
-        if raw is None:
-            return self.spark.createDataFrame(
-                [], "id string, cell int, vec array<double>"
-            )
-        return (
-            raw.groupBy("id", "_cell", "vec")
-            .agg(F.sum("_n").alias("_n"))
-            .filter(F.col("_n") > 0)
-            .select("id", F.col("_cell").alias("cell"), "vec")
+        at the path level to the probed cells' partition dirs, so a
+        search never touches the unprobed (n_centroids - nprobe)/
+        n_centroids of the index."""
+        raw = self._read_state(self._VEC_SCHEMA, part="_cell", values=cells)
+        return self._live_rows(raw, ["id", "_cell", "vec"]).select(
+            "id", F.col("_cell").alias("cell"), "vec"
         )
 
     def read_assignments(self) -> DataFrame:
         """Live (id, cell, vec) view — ≡ batch nearest-centroid
         assignment of the sink's live docs under the frozen codebook."""
-        return self._live(self._state_dirs())
-
-    @property
-    def last_epoch(self) -> int | None:
-        return self._manifest["last_epoch"]
+        return self._live()
 
     # ----- search ------------------------------------------------------------
 
@@ -275,7 +202,7 @@ class IncrementalANNIndex:
             return self.spark.createDataFrame(
                 [], "query_id string, neighbor_id string, cos double, rank int"
             )
-        live = self._live(self._state_dirs(), cells)
+        live = self._live(cells)
         scored = (
             live.join(F.broadcast(probes), "cell")
             .join(F.broadcast(qv), "query_id")
@@ -295,34 +222,10 @@ class IncrementalANNIndex:
 
     # ----- refresh -----------------------------------------------------------
 
-    def refresh(self, to_epoch: int | None = None) -> dict:
-        """Advance the index to the sink's ``to_epoch`` (default
-        latest). Idempotent; per-refresh cost O(changed docs · K),
-        never O(corpus). The first refresh trains the codebook on the
-        bootstrap adds and freezes it in the manifest."""
-        committed = self.sink.committed_epochs()
-        if not committed:
-            raise ValueError("sink has no committed epochs")
-        if to_epoch is None:
-            to_epoch = max(committed)
-        elif to_epoch not in committed:
-            raise ValueError(f"epoch {to_epoch} is not committed in the sink")
-        last = self._manifest["last_epoch"]
-        if last is not None and to_epoch <= last:
-            return {"refreshed": False, "last_epoch": last, "rows": 0}
-        try:
-            changes = self.sink.read_changes(
-                to_epoch, from_epoch=last, include_preimages=True
-            )
-        except ValueError as e:
-            if "identical" in str(e) or "no new deltas" in str(e):
-                self._commit(to_epoch, None)
-                return {"refreshed": True, "last_epoch": to_epoch, "rows": 0}
-            raise
-        ct = F.col("_change_type")
-        add_vecs = self._vec_rows(
-            changes.filter(ct.isin("insert", "update_postimage"))
-        )
+    def _fold(self, changes: DataFrame, to_epoch: int) -> tuple[dict, dict]:
+        """Per-refresh cost O(changed docs · K), never O(corpus). The
+        first refresh trains the codebook on the bootstrap adds and
+        freezes it in the manifest."""
         cents = self._manifest["centroids"]
         if cents is None:
             # bootstrap: train on this refresh's adds (the live corpus
@@ -331,20 +234,17 @@ class IncrementalANNIndex:
             # K x dim floats.
             from ..operators.similarity import ivf_centroids
 
+            adds = changes.filter(
+                F.col("_change_type").isin("insert", "update_postimage")
+            )
             cents = ivf_centroids(
-                add_vecs, self.n_centroids, id_col="_id", vec_col="_v",
+                self._vec_rows(adds), self.n_centroids, id_col="_id", vec_col="_v",
                 lloyd_rounds=self.lloyd_rounds,
             )
             if not cents:
                 raise ValueError("bootstrap refresh saw no vectors to train on")
-        adds = self._assign(add_vecs, cents)
-        dels = self._assign(
-            self._vec_rows(changes.filter(ct.isin("delete", "update_preimage"))),
-            cents,
-        )
         delta = (
-            adds.withColumn("_n", F.lit(1))
-            .unionByName(dels.withColumn("_n", F.lit(-1)))
+            self._signed(changes, lambda d: self._assign(self._vec_rows(d), cents))
             .groupBy("id", "cell", "vec")
             .agg(F.sum("_n").alias("_n"))
             .filter(F.col("_n") != 0)  # vector-unchanged updates net out
@@ -352,79 +252,21 @@ class IncrementalANNIndex:
             .drop("cell")
         )
         delta_rel = f"vecs_e{to_epoch}"
-        delta_dir = os.path.join(self.root, delta_rel)
-        if os.path.exists(delta_dir):  # orphan from a crashed attempt
-            shutil.rmtree(delta_dir)
-        delta.write.partitionBy("_cell").parquet(delta_dir)
-        n_rows = (
-            self.spark.read.schema(self._VEC_SCHEMA)
-            .option("basePath", delta_dir).parquet(delta_dir).count()
-        )
-        self._commit(to_epoch, delta_rel, cents)
-        return {"refreshed": True, "last_epoch": to_epoch, "rows": n_rows}
+        delta.write.partitionBy("_cell").parquet(self._fresh_dir(delta_rel))
+        n_rows = self._read_state(self._VEC_SCHEMA, rels=[delta_rel]).count()
+        return {
+            "deltas": [*self._manifest["deltas"], delta_rel],
+            "centroids": cents,
+        }, {"rows": n_rows}
 
     # ----- maintenance -------------------------------------------------------
 
-    def compact(self) -> dict:
-        """Fold base + deltas into one base dir (the sink's MOR
-        ``compact()`` pattern); state unchanged, read amplification
-        reset. Old dirs stay on disk until ``vacuum``."""
-        if not self._manifest["deltas"]:
-            return {"compacted": False, "deltas_folded": 0}
-        folded = len(self._manifest["deltas"])
-        rel = f"base_e{self._manifest['last_epoch']}"
-        out = os.path.join(self.root, rel)
-        if os.path.exists(out):
-            shutil.rmtree(out)
+    def _write_base(self, path: str) -> None:
         (
             self.read_assignments()
             .withColumn("_n", F.lit(1))
             .withColumn("_cell", F.col("cell"))
             .drop("cell")
             .write.partitionBy("_cell")
-            .parquet(out)
+            .parquet(path)
         )
-        cur = dict(self._manifest)
-        cur["base"], cur["deltas"] = rel, []
-        self._swap(cur)
-        return {"compacted": True, "deltas_folded": folded}
-
-    def vacuum(self) -> list[str]:
-        live = set(self._manifest["deltas"])
-        if self._manifest["base"]:
-            live.add(self._manifest["base"])
-        gone = []
-        for d in sorted(os.listdir(self.root)):
-            p = os.path.join(self.root, d)
-            if os.path.isdir(p) and d not in live:
-                shutil.rmtree(p)
-                gone.append(d)
-        return gone
-
-    # ----- commit ------------------------------------------------------------
-
-    def _commit(
-        self,
-        to_epoch: int,
-        delta_rel: str | None,
-        cents: list[list[float]] | None = None,
-    ) -> None:
-        cur = dict(self._manifest)
-        cur["last_epoch"] = to_epoch
-        if delta_rel:
-            cur["deltas"] = list(cur["deltas"]) + [delta_rel]
-        if cents is not None and cur["centroids"] is None:
-            cur["centroids"] = cents
-        self._swap(cur)
-
-    def _swap(self, cur: dict) -> None:
-        path = os.path.join(self.root, IDX_MANIFEST)
-        stored = self._writer.read(path)
-        if stored is not None and stored["version"] != self._manifest["version"]:
-            raise ConcurrentCommitError(
-                f"index manifest moved to v{stored['version']} (loaded "
-                f"v{self._manifest['version']}) — reopen and retry"
-            )
-        cur["version"] = self._manifest["version"] + 1
-        self._writer.commit(path, cur)
-        self._manifest = cur

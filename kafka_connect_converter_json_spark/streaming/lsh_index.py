@@ -29,11 +29,8 @@ derived state of a ``BucketedMergeSink``, fed by the sink's changelog
   buckets the delta actually touches; the shuffle carries (band, id)
   only — text and signatures never move.
 
-Exactly-once through the same atomic-manifest CAS as the sink/view
-(state dirs written first, manifest swap is the commit point; stale or
-redelivered refresh is a committed no-op; orphan dirs from a crash are
-overwritten on retry and collectable by ``vacuum``). ``compact()``
-folds deltas into a base exactly like the sink's MOR path.
+Lifecycle (exactly-once commit, ``compact()``, ``vacuum()``):
+``derived.DeltaIndex``.
 
 Invariant (tested): after any epoch, ``read_bands()`` equals batch
 banding of the sink's live docs, and ``candidate_pairs()`` equals
@@ -46,20 +43,22 @@ later endpoint).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.textdedup import band_frequency_cut, minhash_signatures
-from .sink import BucketedMergeSink, ConcurrentCommitError, ManifestWriter
+from .derived import KEY_SEP, DeltaIndex  # noqa: F401 (KEY_SEP re-exported)
+from .sink import BucketedMergeSink
 
 IDX_MANIFEST = "_lsh_index_manifest.json"
-# ASCII unit separator: joins composite sink keys into the index's doc id
-KEY_SEP = "\x1f"
 
 
-class IncrementalLSHIndex:
+class IncrementalLSHIndex(DeltaIndex):
+    MANIFEST = IDX_MANIFEST
+    _PARAMS_OF = "hashing/banding"
+    _UNCHANGED = {"new_pairs": 0}
+
     def __init__(
         self,
         spark: SparkSession,
@@ -71,34 +70,15 @@ class IncrementalLSHIndex:
         bands: int = 4,
         num_buckets: int = 16,
         max_band_freq: int | None = None,
-        manifest_writer: ManifestWriter | None = None,
     ) -> None:
         assert num_hashes % bands == 0
-        self.spark = spark
-        self.root = root
-        self.sink = sink
         self.text_col = text_col
         self.n = n
         self.num_hashes = num_hashes
         self.bands = bands
         self.num_buckets = num_buckets
         self.max_band_freq = max_band_freq
-        self._writer = manifest_writer or ManifestWriter()
-        os.makedirs(root, exist_ok=True)
-        self._manifest = self._writer.read(os.path.join(root, IDX_MANIFEST)) or {
-            "version": 0,
-            "last_epoch": None,
-            "base": None,
-            "deltas": [],
-            "pairs": {},
-            "params": self._params(),
-        }
-        if self._manifest["params"] != self._params():
-            raise ValueError(
-                "index exists with different hashing/banding params "
-                f"{self._manifest['params']}; reopen with those "
-                f"(got {self._params()})"
-            )
+        super().__init__(spark, root, sink, pairs={})
 
     def _params(self) -> dict:
         return {
@@ -116,8 +96,7 @@ class IncrementalLSHIndex:
         banding of ``minhash_lsh_candidates`` so the live view is
         interchangeable with the batch operator's."""
         keyed = docs.select(
-            F.concat_ws(KEY_SEP, *[F.col(k) for k in self.sink.keys]).alias("_id"),
-            F.col(self.text_col),
+            self._doc_id().alias("_id"), F.col(self.text_col)
         ).filter(F.col(self.text_col).isNotNull())
         sig = minhash_signatures(
             keyed, self.text_col, "_id", self.n, self.num_hashes
@@ -138,53 +117,24 @@ class IncrementalLSHIndex:
 
     # ----- state reads -----------------------------------------------------
 
-    def _state_dirs(self) -> list[str]:
-        rels = ([self._manifest["base"]] if self._manifest["base"] else []) + list(
-            self._manifest["deltas"]
-        )
-        return [os.path.join(self.root, rel) for rel in rels]
-
-    # explicit schemas: an all-netted-out delta writes an EMPTY
-    # partitioned dir (no part files), which schema inference refuses
     _BAND_SCHEMA = "id string, band string, _n bigint, _bucket bigint"
 
-    def _raw(self, dirs: list[str]) -> DataFrame | None:
-        """Union of state dirs, each read under its OWN basePath — the
-        ``_bucket=`` partition layout is per-dir, so one shared basePath
-        would conflict; per-dir reads keep partition pruning intact."""
-        if not dirs:
-            return None
-        parts = [
-            self.spark.read.schema(self._BAND_SCHEMA)
-            .option("basePath", d)
-            .parquet(d)
-            for d in dirs
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _live(self, dirs: list[str], buckets: list[int] | None = None) -> DataFrame:
-        """sum(count) > 0 per (id, band). ``buckets`` prunes the scan to
-        the partition dirs a probe can possibly match (band equality
-        fixes the bucket) — at 10^10 rows this is the difference between
-        reading the delta's neighborhood and the whole index."""
-        raw = self._raw(dirs)
-        if raw is None:
-            return self.spark.createDataFrame([], "id string, band string")
-        if buckets is not None:
-            raw = raw.filter(F.col("_bucket").isin(buckets))  # partition pruning
-        return (
-            raw.groupBy("id", "band")
-            .agg(F.sum("_n").alias("_n"))
-            .filter(F.col("_n") > 0)
-            .select("id", "band")
+    def _live(
+        self, rels: list[str] | None = None, buckets: list[int] | None = None
+    ) -> DataFrame:
+        """sum(count) > 0 per (id, band) over ``rels`` (default: the
+        committed state). ``buckets`` prunes the scan to the partition
+        dirs a probe can possibly match (band equality fixes the bucket)
+        — at 10^10 rows this is the difference between reading the
+        delta's neighborhood and the whole index."""
+        raw = self._read_state(
+            self._BAND_SCHEMA, part="_bucket", values=buckets, rels=rels
         )
+        return self._live_rows(raw, ["id", "band"]).select("id", "band")
 
     def read_bands(self) -> DataFrame:
         """Live (id, band) view — ≡ batch banding of the sink's live docs."""
-        return self._live(self._state_dirs())
+        return self._live()
 
     def candidate_pairs(self) -> DataFrame:
         """Full candidate set from the index alone — ≡
@@ -218,61 +168,26 @@ class IncrementalLSHIndex:
             *[os.path.join(self.root, rel) for rel in rels]
         ).select("id_a", "id_b")
 
-    @property
-    def last_epoch(self) -> int | None:
-        return self._manifest["last_epoch"]
-
     # ----- refresh -----------------------------------------------------------
 
-    def refresh(self, to_epoch: int | None = None) -> dict:
-        """Advance the index to the sink's ``to_epoch`` (default
-        latest). Idempotent; per-refresh cost O(changed docs + their
-        band neighborhoods), never O(corpus)."""
-        committed = self.sink.committed_epochs()
-        if not committed:
-            raise ValueError("sink has no committed epochs")
-        if to_epoch is None:
-            to_epoch = max(committed)
-        elif to_epoch not in committed:
-            raise ValueError(f"epoch {to_epoch} is not committed in the sink")
-        last = self._manifest["last_epoch"]
-        if last is not None and to_epoch <= last:
-            return {"refreshed": False, "last_epoch": last, "new_pairs": 0}
-        try:
-            changes = self.sink.read_changes(
-                to_epoch, from_epoch=last, include_preimages=True
-            )
-        except ValueError as e:
-            if "identical" in str(e) or "no new deltas" in str(e):
-                self._commit(to_epoch, None, None)
-                return {"refreshed": True, "last_epoch": to_epoch, "new_pairs": 0}
-            raise
-        ct = F.col("_change_type")
-        adds = self._band_rows(changes.filter(ct.isin("insert", "update_postimage")))
-        dels = self._band_rows(changes.filter(ct.isin("delete", "update_preimage")))
+    def _fold(self, changes: DataFrame, to_epoch: int) -> tuple[dict, dict]:
+        """Per-refresh cost O(changed docs + their band neighborhoods),
+        never O(corpus)."""
         delta = (
-            adds.withColumn("_n", F.lit(1))
-            .unionByName(dels.withColumn("_n", F.lit(-1)))
+            self._signed(changes, self._band_rows)
             .groupBy("id", "band")
             .agg(F.sum("_n").alias("_n"))
             .filter(F.col("_n") != 0)  # text-unchanged updates net out
             .withColumn("_bucket", self._bucket())
         )
         delta_rel = f"bands_e{to_epoch}"
-        delta_dir = os.path.join(self.root, delta_rel)
-        if os.path.exists(delta_dir):  # orphan from a crashed attempt
-            shutil.rmtree(delta_dir)
-        delta.write.partitionBy("_bucket").parquet(delta_dir)
+        delta.write.partitionBy("_bucket").parquet(self._fresh_dir(delta_rel))
 
         # probe: this epoch's adds vs the post-refresh live view, pruned
         # to the buckets the adds can match (band equality fixes the
         # bucket). The cap below keeps the collect bounded: past half
         # the buckets, pruning buys nothing — scan them all.
-        written = (
-            self.spark.read.schema(self._BAND_SCHEMA)
-            .option("basePath", delta_dir)
-            .parquet(delta_dir)
-        )
+        written = self._read_state(self._BAND_SCHEMA, rels=[delta_rel])
         add_rows = written.filter(F.col("_n") > 0).select("id", "band", "_bucket")
         hot = [
             r._bucket
@@ -281,7 +196,7 @@ class IncrementalLSHIndex:
             ).collect()
         ]
         buckets = hot if len(hot) <= self.num_buckets // 2 else None
-        post_live = self._live(self._state_dirs() + [delta_dir], buckets)
+        post_live = self._live(self._state_rels() + [delta_rel], buckets)
         post_live = band_frequency_cut(post_live, "band", self.max_band_freq)
         probe = band_frequency_cut(
             add_rows.select("id", "band"), "band", self.max_band_freq
@@ -297,74 +212,29 @@ class IncrementalLSHIndex:
             .distinct()
         )
         pairs_rel = f"pairs_e{to_epoch}"
-        pairs_dir = os.path.join(self.root, pairs_rel)
-        if os.path.exists(pairs_dir):
-            shutil.rmtree(pairs_dir)
+        pairs_dir = self._fresh_dir(pairs_rel)
         pairs.write.parquet(pairs_dir)
         n_pairs = (
             self.spark.read.schema("id_a string, id_b string")
             .parquet(pairs_dir)
             .count()
         )
-        self._commit(to_epoch, delta_rel, pairs_rel)
-        return {"refreshed": True, "last_epoch": to_epoch, "new_pairs": n_pairs}
+        return {
+            "deltas": [*self._manifest["deltas"], delta_rel],
+            "pairs": {**self._manifest["pairs"], str(to_epoch): pairs_rel},
+        }, {"new_pairs": n_pairs}
 
     # ----- maintenance -------------------------------------------------------
 
-    def compact(self) -> dict:
-        """Fold base + deltas into one base dir (the sink's MOR
-        ``compact()`` pattern); state unchanged, read amplification
-        reset. Old dirs stay on disk until ``vacuum``."""
-        if not self._manifest["deltas"]:
-            return {"compacted": False, "deltas_folded": 0}
-        folded = len(self._manifest["deltas"])
-        rel = f"base_e{self._manifest['last_epoch']}"
-        out = os.path.join(self.root, rel)
-        if os.path.exists(out):
-            shutil.rmtree(out)
+    def _write_base(self, path: str) -> None:
         (
             self.read_bands()
             .withColumn("_n", F.lit(1))
             .withColumn("_bucket", self._bucket())
             .write.partitionBy("_bucket")
-            .parquet(out)
+            .parquet(path)
         )
-        cur = dict(self._manifest)
-        cur["base"], cur["deltas"] = rel, []
-        self._swap(cur)
-        return {"compacted": True, "deltas_folded": folded}
 
-    def vacuum(self) -> list[str]:
-        live = set(self._manifest["deltas"]) | set(self._manifest["pairs"].values())
-        if self._manifest["base"]:
-            live.add(self._manifest["base"])
-        gone = []
-        for d in sorted(os.listdir(self.root)):
-            p = os.path.join(self.root, d)
-            if os.path.isdir(p) and d not in live:
-                shutil.rmtree(p)
-                gone.append(d)
-        return gone
-
-    # ----- commit ------------------------------------------------------------
-
-    def _commit(self, to_epoch: int, delta_rel: str | None, pairs_rel: str | None):
-        cur = dict(self._manifest)
-        cur["last_epoch"] = to_epoch
-        if delta_rel:
-            cur["deltas"] = list(cur["deltas"]) + [delta_rel]
-        if pairs_rel:
-            cur["pairs"] = {**cur["pairs"], str(to_epoch): pairs_rel}
-        self._swap(cur)
-
-    def _swap(self, cur: dict) -> None:
-        path = os.path.join(self.root, IDX_MANIFEST)
-        stored = self._writer.read(path)
-        if stored is not None and stored["version"] != self._manifest["version"]:
-            raise ConcurrentCommitError(
-                f"index manifest moved to v{stored['version']} (loaded "
-                f"v{self._manifest['version']}) — reopen and retry"
-            )
-        cur["version"] = self._manifest["version"] + 1
-        self._writer.commit(path, cur)
-        self._manifest = cur
+    def _live_rels(self) -> set[str]:
+        # the pair log is referenced state: vacuum keeps it
+        return super()._live_rels() | set(self._manifest["pairs"].values())

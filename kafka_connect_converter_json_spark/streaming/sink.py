@@ -59,6 +59,12 @@ class ConcurrentCommitError(RuntimeError):
     epoch-idempotency check makes the retry safe."""
 
 
+class NoChanges(ValueError):
+    """``read_changes`` was asked for the changelog between two snapshots
+    that hold the same data, so there is none to return. Derived state
+    catches this type to advance its epoch without writing state."""
+
+
 class ManifestWriter:
     """Atomic manifest commit seam.
 
@@ -2736,7 +2742,12 @@ class BucketedMergeSink:
         differs between the two bucket maps are read at all — the diff
         cost is O(changed data), not O(table). Within changed buckets a
         key changed iff its stored ``order_col`` changed (LWW: one
-        version per key per snapshot, monotone in ``order_col``)."""
+        version per key per snapshot, monotone in ``order_col``).
+
+        Raises :class:`NoChanges` (a ``ValueError``) when the two
+        snapshots hold the same data: ``from_epoch == to_epoch``, or a
+        range that changed no bucket (copy-on-write) or added no delta
+        (merge-on-read)."""
         to_epoch = self._resolve_epoch(to_epoch)
         from_epoch = self._resolve_epoch(from_epoch)
         if self.merge_mode == "mor":
@@ -2755,7 +2766,7 @@ class BucketedMergeSink:
 
         old, new = _read(old_rels, from_s), _read(new_rels, to_s)
         if old is None and new is None:
-            raise ValueError("snapshots are identical — no changed buckets")
+            raise NoChanges("snapshots are identical — no changed buckets")
         ct = "_change_type"
         if old is None:
             return new.withColumn(ct, F.lit("insert"))
@@ -2857,7 +2868,7 @@ class BucketedMergeSink:
             )
         new_rels = [r for r in to_deltas if r not in set(from_deltas)]
         if not new_rels:
-            raise ValueError("snapshots are identical — no new deltas")
+            raise NoChanges("snapshots are identical — no new deltas")
         self._require_rels(new_rels + list(from_buckets.values()) + from_deltas)
         d = self._read_files(new_rels, self._delta_schema(self._snapshot_schema(to_s)))
         payload = [

@@ -11,8 +11,9 @@ the postings of the queried terms.
 ``IncrementalBM25Index`` is the text-search member of the derived-state
 family (N20 aggregate views, N21 LSH near-dup, N22 IVF ANN): all four
 hang off the sink's preimage changelog (N10/N20,
-``read_changes(include_preimages=True)``) and commit through the same
-atomic-manifest CAS. Two state tables:
+``read_changes(include_preimages=True)``) and share one lifecycle
+(exactly-once commit, ``compact()``, ``vacuum()``:
+``derived.DeltaIndex``). Two state tables:
 
 - **postings** ``(term, id, _tf)`` — signed term frequencies.
   Adds (``insert``/``update_postimage``) tokenize the NEW text version
@@ -37,30 +38,25 @@ word-character-only terms (``\\w+`` — the batch operator's ``\\b``
 boundary semantics and this index's ``\\W+`` tokenizer agree exactly on
 those), ``search(terms, k)`` over the index equals
 ``bm25_topk(live_docs, terms, k)`` recomputed from scratch.
-
-Exactly-once through the manifest CAS (state dirs first, manifest swap
-is the commit; stale/redelivered refresh is a committed no-op; orphan
-dirs from a crash are overwritten on retry and collectable by
-``vacuum``). ``compact()`` folds deltas into a base exactly like the
-sink's MOR path.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .sink import BucketedMergeSink, ConcurrentCommitError, ManifestWriter
+from .derived import KEY_SEP, DeltaIndex  # noqa: F401 (KEY_SEP re-exported)
+from .sink import BucketedMergeSink, fold_on_driver
 
 IDX_MANIFEST = "_bm25_index_manifest.json"
-# ASCII unit separator: joins composite sink keys into the index's doc id
-KEY_SEP = "\x1f"
 
 
-class IncrementalBM25Index:
+class IncrementalBM25Index(DeltaIndex):
+    MANIFEST = IDX_MANIFEST
+    _PARAMS_OF = "tokenizer/scoring"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -70,30 +66,12 @@ class IncrementalBM25Index:
         num_buckets: int = 16,
         k1: float = 1.2,
         b: float = 0.75,
-        manifest_writer: ManifestWriter | None = None,
     ) -> None:
-        self.spark = spark
-        self.root = root
-        self.sink = sink
         self.text_col = text_col
         self.num_buckets = num_buckets
         self.k1 = k1
         self.b = b
-        self._writer = manifest_writer or ManifestWriter()
-        os.makedirs(root, exist_ok=True)
-        self._manifest = self._writer.read(os.path.join(root, IDX_MANIFEST)) or {
-            "version": 0,
-            "last_epoch": None,
-            "base": None,
-            "deltas": [],
-            "params": self._params(),
-        }
-        if self._manifest["params"] != self._params():
-            raise ValueError(
-                "index exists with different tokenizer/scoring params "
-                f"{self._manifest['params']}; reopen with those "
-                f"(got {self._params()})"
-            )
+        super().__init__(spark, root, sink)
 
     def _params(self) -> dict:
         return {
@@ -107,8 +85,7 @@ class IncrementalBM25Index:
 
     def _keyed(self, docs: DataFrame) -> DataFrame:
         return docs.select(
-            F.concat_ws(KEY_SEP, *[F.col(c) for c in self.sink.keys]).alias("_id"),
-            F.col(self.text_col).alias("_text"),
+            self._doc_id().alias("_id"), F.col(self.text_col).alias("_text")
         )
 
     def _posting_rows(self, docs: DataFrame) -> DataFrame:
@@ -138,75 +115,38 @@ class IncrementalBM25Index:
         )
         return self._keyed(docs).select(F.col("_id").alias("id"), dl.alias("dl"))
 
-    def _bucket(self):
-        return F.pmod(F.xxhash64(F.col("term")), F.lit(self.num_buckets))
+    def _bucket(self, term: str | Column = "term") -> Column:
+        return F.pmod(F.xxhash64(term), F.lit(self.num_buckets))
 
     # ----- state reads ------------------------------------------------------
 
-    # explicit schemas: an all-netted-out delta writes an EMPTY
-    # partitioned dir (no part files), which schema inference refuses
     _POST_SCHEMA = "term string, id string, _tf bigint, _bucket bigint"
     _DLEN_SCHEMA = "id string, _dl bigint, _n bigint"
 
-    def _state_rels(self) -> list[str]:
-        return ([self._manifest["base"]] if self._manifest["base"] else []) + list(
-            self._manifest["deltas"]
-        )
+    def _post_raw(self, buckets: list[int] | None = None) -> DataFrame:
+        """Raw postings; ``buckets`` prunes the read at the path level to
+        the ``_bucket=<b>`` dirs the queried terms can live in (asserted
+        via ``inputFiles()`` in the tests)."""
+        return self._read_state(self._POST_SCHEMA, "post", "_bucket", buckets)
 
-    def _post_raw(self, buckets: list[int] | None = None) -> DataFrame | None:
-        """Union of postings state dirs, each under its OWN basePath (the
-        ``_bucket=`` layout is per-dir); ``buckets`` prunes each read at
-        the PATH level — only the ``_bucket=<b>`` subdirectories the
-        queried terms can live in are handed to the reader, so unprobed
-        buckets' files never appear in the scan (asserted via
-        ``inputFiles()`` in the tests)."""
-        parts = []
-        for rel in self._state_rels():
-            d = os.path.join(self.root, rel, "post")
-            if buckets is None:
-                paths = [d]
-            else:
-                paths = [
-                    p
-                    for b in buckets
-                    if os.path.isdir(p := os.path.join(d, f"_bucket={b}"))
-                ]
-                if not paths:  # delta netted out / terms miss this dir
-                    continue
-            parts.append(
-                self.spark.read.schema(self._POST_SCHEMA)
-                .option("basePath", d)
-                .parquet(*paths)
-            )
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _dlen_raw(self) -> DataFrame | None:
-        dirs = [os.path.join(self.root, r, "dlen") for r in self._state_rels()]
-        if not dirs:
-            return None
-        return self.spark.read.schema(self._DLEN_SCHEMA).parquet(*dirs)
+    def _dlen_raw(self) -> DataFrame:
+        return self._read_state(self._DLEN_SCHEMA, "dlen")
 
     def read_postings(self) -> DataFrame:
         """Live (term, id, tf) view — ≡ tokenizing the sink's live docs."""
-        raw = self._post_raw()
-        if raw is None:
-            return self.spark.createDataFrame([], "term string, id string, tf bigint")
-        return (
-            raw.groupBy("term", "id")
-            .agg(F.sum("_tf").alias("tf"))
-            .filter(F.col("tf") > 0)
-        )
+        return self._live_postings(self._post_raw())
 
     def read_doclens(self) -> DataFrame:
         """Live (id, dl) view — one row per live document."""
-        raw = self._dlen_raw()
-        if raw is None:
-            return self.spark.createDataFrame([], "id string, dl bigint")
+        return self._live_doclens(self._dlen_raw())
+
+    def _live_postings(self, raw: DataFrame) -> DataFrame:
+        return self._live_rows(raw, ["term", "id"], "_tf").withColumnRenamed(
+            "_tf", "tf"
+        )
+
+    @staticmethod
+    def _live_doclens(raw: DataFrame) -> DataFrame:
         return (
             raw.groupBy("id")
             .agg(F.sum("_dl").alias("dl"), F.sum("_n").alias("_n"))
@@ -218,18 +158,11 @@ class IncrementalBM25Index:
         """(n_docs, sum_dl) — exact from ONE ungrouped scan: a version's
         add and retraction rows cancel, so the signed sums over the raw
         state equal the live totals (no per-id shuffle)."""
-        raw = self._dlen_raw()
-        if raw is None:
-            return 0, 0
-        row = raw.agg(
+        row = self._dlen_raw().agg(
             F.coalesce(F.sum("_n"), F.lit(0)).alias("n"),
             F.coalesce(F.sum("_dl"), F.lit(0)).alias("s"),
         ).collect()[0]
         return int(row.n), int(row.s)
-
-    @property
-    def last_epoch(self) -> int | None:
-        return self._manifest["last_epoch"]
 
     # ----- query --------------------------------------------------------------
 
@@ -242,36 +175,21 @@ class IncrementalBM25Index:
         empty = self.spark.createDataFrame(
             [], "term string, id string, score double, rnk int"
         )
-        # bounded |terms|-row job: partition ids of the queried terms
-        buckets = [
-            r.b
-            for r in self.spark.createDataFrame(
-                [(t,) for t in terms], "term string"
-            ).select(self._bucket().alias("b")).distinct().collect()
-        ]
+        # partition ids of the queried terms, folded on the driver
+        buckets = sorted(
+            set(fold_on_driver(self.spark, *[self._bucket(F.lit(t)) for t in terms]))
+        )
         raw = self._post_raw(buckets)
-        if raw is None:
-            return empty
         n_docs, sum_dl = self.corpus_stats()
         if n_docs == 0 or sum_dl == 0:
             return empty
-        live = (
-            raw.filter(F.col("term").isin(terms))
-            .groupBy("term", "id")
-            .agg(F.sum("_tf").alias("tf"))
-            .filter(F.col("tf") > 0)
-        )
+        live = self._live_postings(raw.filter(F.col("term").isin(terms)))
         dfreq = live.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df_t"))
         # candidate docs only: semi-join the RAW doclen state before its
         # groupBy, so the per-id shuffle is bounded by the queried terms'
         # postings, never the corpus
-        dlen = (
-            self._dlen_raw()
-            .join(live.select("id").distinct(), "id", "left_semi")
-            .groupBy("id")
-            .agg(F.sum("_dl").alias("dl"), F.sum("_n").alias("_n"))
-            .filter(F.col("_n") > 0)
-            .select("id", "dl")
+        dlen = self._live_doclens(
+            self._dlen_raw().join(live.select("id").distinct(), "id", "left_semi")
         )
         scored = (
             live.join(dlen, "id")
@@ -315,122 +233,40 @@ class IncrementalBM25Index:
 
     # ----- refresh --------------------------------------------------------------
 
-    def refresh(self, to_epoch: int | None = None) -> dict:
-        """Advance the index to the sink's ``to_epoch`` (default latest).
-        Idempotent; per-refresh cost O(changed docs · their tokens),
-        never O(corpus)."""
-        committed = self.sink.committed_epochs()
-        if not committed:
-            raise ValueError("sink has no committed epochs")
-        if to_epoch is None:
-            to_epoch = max(committed)
-        elif to_epoch not in committed:
-            raise ValueError(f"epoch {to_epoch} is not committed in the sink")
-        last = self._manifest["last_epoch"]
-        if last is not None and to_epoch <= last:
-            return {"refreshed": False, "last_epoch": last}
-        try:
-            changes = self.sink.read_changes(
-                to_epoch, from_epoch=last, include_preimages=True
-            )
-        except ValueError as e:
-            if "identical" in str(e) or "no new deltas" in str(e):
-                self._commit(to_epoch, None)
-                return {"refreshed": True, "last_epoch": to_epoch}
-            raise
-        ct = F.col("_change_type")
-        adds = changes.filter(ct.isin("insert", "update_postimage"))
-        dels = changes.filter(ct.isin("delete", "update_preimage"))
+    def _fold(self, changes: DataFrame, to_epoch: int) -> tuple[dict, dict]:
+        """Per-refresh cost O(changed docs · their tokens), never
+        O(corpus)."""
         post_delta = (
-            self._posting_rows(adds)
-            .unionByName(
-                self._posting_rows(dels).withColumn("tf", -F.col("tf"))
-            )
+            self._signed(changes, self._posting_rows)
             .groupBy("term", "id")
-            .agg(F.sum("tf").alias("_tf"))
+            .agg(F.sum(F.col("tf") * F.col("_n")).alias("_tf"))
             .filter(F.col("_tf") != 0)  # text-unchanged updates net out
             .withColumn("_bucket", self._bucket())
         )
         dlen_delta = (
-            self._doclen_rows(adds)
-            .select("id", F.col("dl").alias("_dl"), F.lit(1).cast("long").alias("_n"))
-            .unionByName(
-                self._doclen_rows(dels).select(
-                    "id",
-                    (-F.col("dl")).alias("_dl"),
-                    F.lit(-1).cast("long").alias("_n"),
-                )
-            )
+            self._signed(changes, self._doclen_rows)
             .groupBy("id")
-            .agg(F.sum("_dl").alias("_dl"), F.sum("_n").alias("_n"))
+            .agg(F.sum(F.col("dl") * F.col("_n")).alias("_dl"), F.sum("_n").alias("_n"))
             .filter((F.col("_dl") != 0) | (F.col("_n") != 0))
         )
         rel = f"e{to_epoch}"
-        out = os.path.join(self.root, rel)
-        if os.path.exists(out):  # orphan from a crashed attempt
-            shutil.rmtree(out)
+        out = self._fresh_dir(rel)
         post_delta.write.partitionBy("_bucket").parquet(os.path.join(out, "post"))
         dlen_delta.write.parquet(os.path.join(out, "dlen"))
-        self._commit(to_epoch, rel)
-        return {"refreshed": True, "last_epoch": to_epoch}
+        return {"deltas": [*self._manifest["deltas"], rel]}, {}
 
     # ----- maintenance ------------------------------------------------------------
 
-    def compact(self) -> dict:
-        """Fold base + deltas into one base dir (the sink's MOR
-        ``compact()`` pattern); state unchanged, read amplification
-        reset. Old dirs stay on disk until ``vacuum``."""
-        if not self._manifest["deltas"]:
-            return {"compacted": False, "deltas_folded": 0}
-        folded = len(self._manifest["deltas"])
-        rel = f"base_e{self._manifest['last_epoch']}"
-        out = os.path.join(self.root, rel)
-        if os.path.exists(out):
-            shutil.rmtree(out)
+    def _write_base(self, path: str) -> None:
         (
             self.read_postings()
             .select("term", "id", F.col("tf").alias("_tf"))
             .withColumn("_bucket", self._bucket())
             .write.partitionBy("_bucket")
-            .parquet(os.path.join(out, "post"))
+            .parquet(os.path.join(path, "post"))
         )
         (
             self.read_doclens()
             .select("id", F.col("dl").alias("_dl"), F.lit(1).cast("long").alias("_n"))
-            .write.parquet(os.path.join(out, "dlen"))
+            .write.parquet(os.path.join(path, "dlen"))
         )
-        cur = dict(self._manifest)
-        cur["base"], cur["deltas"] = rel, []
-        self._swap(cur)
-        return {"compacted": True, "deltas_folded": folded}
-
-    def vacuum(self) -> list[str]:
-        live = set(self._state_rels())
-        gone = []
-        for d in sorted(os.listdir(self.root)):
-            p = os.path.join(self.root, d)
-            if os.path.isdir(p) and d not in live:
-                shutil.rmtree(p)
-                gone.append(d)
-        return gone
-
-    # ----- commit -------------------------------------------------------------------
-
-    def _commit(self, to_epoch: int, delta_rel: str | None) -> None:
-        cur = dict(self._manifest)
-        cur["last_epoch"] = to_epoch
-        if delta_rel:
-            cur["deltas"] = list(cur["deltas"]) + [delta_rel]
-        self._swap(cur)
-
-    def _swap(self, cur: dict) -> None:
-        path = os.path.join(self.root, IDX_MANIFEST)
-        stored = self._writer.read(path)
-        if stored is not None and stored["version"] != self._manifest["version"]:
-            raise ConcurrentCommitError(
-                f"index manifest moved to v{stored['version']} (loaded "
-                f"v{self._manifest['version']}) — reopen and retry"
-            )
-        cur["version"] = self._manifest["version"] + 1
-        self._writer.commit(path, cur)
-        self._manifest = cur

@@ -44,23 +44,20 @@ Two maintenance strategies, chosen per view:
   insert-5-after-displacing-3 case). Steady state is O(changes +
   view·k) per refresh.
 
-Exactly-once: each refresh writes a full state snapshot under
-``state_e{to_epoch}/`` and then atomically swaps ``_view_manifest.json``
-(same ``ManifestWriter`` seam and optimistic-concurrency check as the
-sink). Re-delivering a committed refresh is a no-op; a crash between
-state write and manifest swap leaves an orphan directory the next
-refresh overwrites — never a partially visible state.
+Each refresh writes a full state snapshot under ``state_e{to_epoch}/``
+and commits it through ``_view_manifest.json`` (lifecycle and
+exactly-once: ``derived.DerivedState``).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sink import BucketedMergeSink, ConcurrentCommitError, ManifestWriter
+from .derived import DerivedState
+from .sink import BucketedMergeSink
 
 VIEW_MANIFEST = "_view_manifest.json"
 
@@ -70,7 +67,7 @@ _ALL_FNS = _DELTA_FNS | _MINMAX
 _CNT = "_view_rows"  # hidden per-group live-row count (group GC + count())
 
 
-class IncrementalAggView:
+class IncrementalAggView(DerivedState):
     """A materialized ``GROUP BY`` over a :class:`BucketedMergeSink`,
     refreshed incrementally from the sink's changelog.
 
@@ -80,6 +77,8 @@ class IncrementalAggView:
     schema ``group_cols + aggs`` as of ``last_epoch``.
     """
 
+    MANIFEST = VIEW_MANIFEST
+
     def __init__(
         self,
         spark: SparkSession,
@@ -88,7 +87,6 @@ class IncrementalAggView:
         group_cols: list[str],
         aggs: dict[str, tuple[str, str | None]],
         strategy: str = "delta",
-        manifest_writer: ManifestWriter | None = None,
         candidates_per_group: int = 8,
     ) -> None:
         if strategy not in ("delta", "recompute", "hybrid"):
@@ -109,39 +107,30 @@ class IncrementalAggView:
         bad = [c for c in group_cols if c in aggs]
         if bad:
             raise ValueError(f"grouping columns also named as aggregates: {bad}")
-        self.spark = spark
-        self.root = root
-        self.sink = sink
         self.group_cols = list(group_cols)
         self.aggs = dict(aggs)
         self.strategy = strategy
-        self._writer = manifest_writer or ManifestWriter()
-        os.makedirs(root, exist_ok=True)
-        self._manifest = self._writer.read(os.path.join(root, VIEW_MANIFEST)) or {
-            "last_epoch": None,
+        super().__init__(spark, root, sink, {
             "state": None,
             "strategy": strategy,
             "k": self.k if strategy == "hybrid" else None,
-            "version": 0,
-        }
-        if self._manifest.get("strategy") != strategy:
+        })
+
+    def _check_reopen(self) -> None:
+        if self._manifest.get("strategy") != self.strategy:
             raise ValueError(
-                f"view at {root} was materialized with strategy="
+                f"view at {self.root} was materialized with strategy="
                 f"{self._manifest.get('strategy')!r}; reopen with that"
             )
-        if strategy == "hybrid" and self._manifest.get("k") not in (None, self.k):
+        if self.strategy == "hybrid" and self._manifest.get("k") not in (None, self.k):
             # candidate arrays in the stored state were truncated at the
             # recorded k; a different bound would corrupt the invariant
             raise ValueError(
-                f"view at {root} was materialized with "
+                f"view at {self.root} was materialized with "
                 f"candidates_per_group={self._manifest.get('k')}; reopen with that"
             )
 
     # ----- public surface ---------------------------------------------------
-
-    @property
-    def last_epoch(self) -> int | None:
-        return self._manifest["last_epoch"]
 
     def read(self) -> DataFrame:
         """Finalized view state as of ``last_epoch``."""
@@ -175,29 +164,7 @@ class IncrementalAggView:
                 )
         return raw.select(*sel)
 
-    def refresh(self, to_epoch: int | None = None) -> dict:
-        """Advance the view to ``to_epoch`` (default: the sink's latest
-        committed epoch). Idempotent: a target at or behind
-        ``last_epoch`` is a committed-refresh no-op."""
-        committed = self.sink.committed_epochs()
-        if not committed:
-            raise ValueError("sink has no committed epochs")
-        if to_epoch is None:
-            to_epoch = max(committed)
-        elif to_epoch not in committed:
-            raise ValueError(f"epoch {to_epoch} is not committed in the sink")
-        last = self._manifest["last_epoch"]
-        if last is not None and to_epoch <= last:
-            return {"refreshed": False, "last_epoch": last}
-        try:
-            changes = self.sink.read_changes(
-                to_epoch, from_epoch=last, include_preimages=True
-            )
-        except ValueError as e:
-            if "identical" in str(e) or "no new deltas" in str(e):
-                self._commit(to_epoch, self._manifest["state"])
-                return {"refreshed": True, "last_epoch": to_epoch, "changes": 0}
-            raise
+    def _fold(self, changes: DataFrame, to_epoch: int) -> tuple[dict, dict]:
         if self.strategy == "delta":
             state = self._delta_state(changes)
         elif self.strategy == "hybrid":
@@ -205,19 +172,11 @@ class IncrementalAggView:
         else:
             state = self._recompute_state(changes, to_epoch)
         rel = f"state_e{to_epoch}"
-        state.write.mode("overwrite").parquet(os.path.join(self.root, rel))
-        self._commit(to_epoch, rel)
-        return {"refreshed": True, "last_epoch": to_epoch}
+        state.write.parquet(self._fresh_dir(rel))
+        return {"state": rel}, {}
 
-    def vacuum(self) -> list[str]:
-        """Drop state snapshots the manifest no longer references."""
-        live = {self._manifest["state"]}
-        gone = []
-        for d in sorted(os.listdir(self.root)):
-            if d.startswith("state_e") and d not in live:
-                shutil.rmtree(os.path.join(self.root, d))
-                gone.append(d)
-        return gone
+    def _live_rels(self) -> set[str]:
+        return {self._manifest["state"]}
 
     # ----- strategies -------------------------------------------------------
 
@@ -323,10 +282,7 @@ class IncrementalAggView:
                 .agg(F.sum("n").alias("n"))
                 .filter(F.col("n") > 0)
             )
-            arr = F.array_sort(F.collect_list(F.struct(F.col("v"), F.col("n"))))
-            if not asc:
-                arr = F.reverse(arr)
-            lvl2 = lvl1.groupBy(*self.group_cols).agg(arr.alias("_arr"))
+            lvl2, kept, cut = self._candidates(lvl1, asc, "_arr")
             if has_prior:
                 ub_df = prior.select(
                     *[F.col(c).alias(f"_ug_{c}") for c in self.group_cols],
@@ -337,13 +293,9 @@ class IncrementalAggView:
                 ).drop(*[f"_ug_{c}" for c in self.group_cols])
             else:
                 lvl2 = lvl2.withColumn("_old_ub", F.lit(None).cast(vtype))
-            kept = F.slice(F.col("_arr"), 1, self.k)
-            trunc = F.size(F.col("_arr")) > self.k
-            boundary = F.element_at(kept, -1)["v"]
-            tighter = F.least if asc else F.greatest
-            new_ub = F.when(
-                trunc, tighter(F.coalesce(F.col("_old_ub"), boundary), boundary)
-            ).otherwise(F.col("_old_ub"))
+            # least/greatest skip nulls: the old bound survives an
+            # untruncated merge, and a first truncation sets the bound
+            new_ub = (F.least if asc else F.greatest)(F.col("_old_ub"), cut)
             head = F.element_at(kept, 1)["v"]
             crossed = (head > new_ub) if asc else (head < new_ub)
             cand_df = lvl2.select(
@@ -385,13 +337,7 @@ class IncrementalAggView:
                 .groupBy(*self.group_cols, F.col(col).alias("v"))
                 .agg(F.count(F.lit(1)).alias("n"))
             )
-            f_arr = F.array_sort(F.collect_list(F.struct(F.col("v"), F.col("n"))))
-            if not asc:
-                f_arr = F.reverse(f_arr)
-            f_lvl2 = f_lvl1.groupBy(*self.group_cols).agg(f_arr.alias("_farr"))
-            f_kept = F.slice(F.col("_farr"), 1, self.k)
-            f_trunc = F.size(F.col("_farr")) > self.k
-            f_ub = F.when(f_trunc, F.element_at(f_kept, -1)["v"])
+            f_lvl2, f_kept, f_ub = self._candidates(f_lvl1, asc, "_farr")
             fixed = f_lvl2.select(
                 *[F.col(c).alias(f"_fx_{c}") for c in self.group_cols],
                 f_kept.alias("_fcand"),
@@ -417,6 +363,20 @@ class IncrementalAggView:
             )
         return state
 
+    def _candidates(self, multiset: DataFrame, asc: bool, name: str):
+        """Group ``(group_cols, v, n)`` rows into one array column
+        ``name`` per group, sorted best-first. Returns the grouped
+        frame, the array's first k candidates, and the value of the
+        last kept candidate when the array is longer than k (the new
+        displacement bound), else null."""
+        arr = F.array_sort(F.collect_list(F.struct(F.col("v"), F.col("n"))))
+        grouped = multiset.groupBy(*self.group_cols).agg(
+            (arr if asc else F.reverse(arr)).alias(name)
+        )
+        kept = F.slice(F.col(name), 1, self.k)
+        cut = F.when(F.size(F.col(name)) > self.k, F.element_at(kept, -1)["v"])
+        return grouped, kept, cut
+
     def _eq_nullsafe(self, left: DataFrame, prefix: str):
         cond = None
         for c in self.group_cols:
@@ -434,14 +394,6 @@ class IncrementalAggView:
             *[F.col(c).alias(f"_dirty_{c}") for c in self.group_cols]
         ).distinct()
         base = self.sink.read_as_of(to_epoch)
-
-        def _nullsafe(left: DataFrame):
-            cond = None
-            for c in self.group_cols:
-                eq = left[c].eqNullSafe(F.col(f"_dirty_{c}"))
-                cond = eq if cond is None else (cond & eq)
-            return cond
-
         exprs = []
         for out, (fn, col) in self.aggs.items():
             if fn == "count":
@@ -449,39 +401,20 @@ class IncrementalAggView:
             else:
                 exprs.append(getattr(F, fn)(F.col(col)).alias(out))
         fresh = (
-            base.join(dirty, _nullsafe(base), "left_semi")
+            base.join(dirty, self._eq_nullsafe(base, "_dirty_"), "left_semi")
             .groupBy(*self.group_cols)
             .agg(*exprs)
         )
         prior = self._read_raw()
         if prior is None:
             return fresh
-        kept = prior.join(dirty, _nullsafe(prior), "left_anti")
+        kept = prior.join(dirty, self._eq_nullsafe(prior, "_dirty_"), "left_anti")
         return kept.unionByName(fresh)
 
-    # ----- state & commit ---------------------------------------------------
+    # ----- state -------------------------------------------------------------
 
     def _read_raw(self) -> DataFrame | None:
         rel = self._manifest["state"]
         if rel is None:
             return None
         return self.spark.read.parquet(os.path.join(self.root, rel))
-
-    def _commit(self, to_epoch: int, state_rel: str | None) -> None:
-        path = os.path.join(self.root, VIEW_MANIFEST)
-        current = self._writer.read(path)
-        cur_ver = (current or {}).get("version", 0)
-        if cur_ver != self._manifest["version"]:
-            raise ConcurrentCommitError(
-                f"view manifest advanced underneath us (v{cur_ver} != "
-                f"v{self._manifest['version']}) — reopen and retry"
-            )
-        nxt = {
-            "last_epoch": to_epoch,
-            "state": state_rel,
-            "strategy": self.strategy,
-            "k": self.k if self.strategy == "hybrid" else None,
-            "version": self._manifest["version"] + 1,
-        }
-        self._writer.commit(path, nxt)
-        self._manifest = nxt

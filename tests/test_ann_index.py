@@ -290,34 +290,6 @@ def test_compact_and_vacuum_preserve_state(spark, events, tmp_path):
     assert idx.compact() == {"compacted": False, "deltas_folded": 0}
 
 
-def test_crash_between_state_and_manifest_recovers(spark, events, tmp_path):
-    sink = ingest(
-        spark, events, str(tmp_path / "s"), N, n_epochs=2, num_buckets=8,
-        merge_mode="mor",
-    )
-    root = str(tmp_path / "i")
-    idx = IncrementalANNIndex(
-        spark, root, sink, vec_expr=_vec_expr(), n_centroids=K_CENTS,
-    )
-    idx.refresh(to_epoch=0)
-
-    class Boom(RuntimeError):
-        pass
-
-    idx._commit = lambda *a, **kw: (_ for _ in ()).throw(Boom())
-    with pytest.raises(Boom):
-        idx.refresh(to_epoch=1)  # dirs written, manifest NOT swapped
-    idx2 = IncrementalANNIndex(
-        spark, root, sink, vec_expr=_vec_expr(), n_centroids=K_CENTS,
-    )
-    assert idx2.last_epoch == 0
-    idx2.refresh(to_epoch=1)
-    cents = idx2.centroids
-    live = {r.id: list(r.vec) for r in _live_vecs(sink).collect()}
-    got = {(r.id, r.cell) for r in idx2.read_assignments().collect()}
-    assert got == {(i, _argmin_cell(v, cents)) for i, v in live.items()}
-
-
 def test_param_mismatch_reopen_refusal(spark, events, tmp_path):
     sink = ingest(
         spark, events, str(tmp_path / "s"), N, n_epochs=1, num_buckets=8,

@@ -180,28 +180,6 @@ def test_compact_and_vacuum_preserve_state(spark, events, tmp_path):
     assert idx.compact() == {"compacted": False, "deltas_folded": 0}
 
 
-def test_crash_between_state_and_manifest_recovers(spark, events, tmp_path):
-    sink = ingest(
-        spark, events, str(tmp_path / "s"), N, n_epochs=2, num_buckets=8,
-        merge_mode="mor",
-    )
-    root = str(tmp_path / "i")
-    idx = IncrementalLSHIndex(spark, root, sink, num_buckets=8)
-    idx.refresh(to_epoch=0)
-
-    class Boom(RuntimeError):
-        pass
-
-    idx._commit = lambda *a: (_ for _ in ()).throw(Boom())
-    with pytest.raises(Boom):
-        idx.refresh(to_epoch=1)  # dirs written, manifest NOT swapped
-    # fresh open: partial refresh invisible, retry overwrites orphans
-    idx2 = IncrementalLSHIndex(spark, root, sink, num_buckets=8)
-    assert idx2.last_epoch == 0
-    idx2.refresh(to_epoch=1)
-    assert _rows(idx2.read_bands()) == _rows(idx2._band_rows(sink.read()))
-
-
 def test_param_mismatch_reopen_refusal(spark, events, tmp_path):
     sink = ingest(
         spark, events, str(tmp_path / "s"), N, n_epochs=1, num_buckets=8,

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import count_spark_jobs
 from kafka_connect_converter_json_spark.operators.corpus_filters import bm25_topk
 from kafka_connect_converter_json_spark.sources.cdc_gen import gen_events
 from kafka_connect_converter_json_spark.streaming.ingest import ingest
@@ -141,6 +142,13 @@ def test_search_prunes_to_term_buckets(spark, loaded):
         if "_bucket=" in p
     }
     assert len(all_b) > len(touched)
+    # the queried terms' bucket ids fold on the driver: building a
+    # search submits only the corpus-stats jobs
+    with count_spark_jobs(spark) as stats:
+        idx.corpus_stats()
+    with count_spark_jobs(spark) as n:
+        idx.search(terms)
+    assert n["jobs"] == stats["jobs"]
 
 
 def test_deletes_are_retracted(spark, events, loaded):
@@ -225,29 +233,6 @@ def test_compact_and_vacuum_preserve_state(spark, events, tmp_path):
     assert any(d.startswith("e") for d in gone)
     assert _rows(idx.read_postings()) == postings
     assert idx.compact() == {"compacted": False, "deltas_folded": 0}
-
-
-def test_crash_between_state_and_manifest_recovers(spark, events, tmp_path):
-    sink = ingest(
-        spark, events, str(tmp_path / "s"), N, n_epochs=2, num_buckets=8,
-        merge_mode="mor",
-    )
-    root = str(tmp_path / "i")
-    idx = IncrementalBM25Index(spark, root, sink, num_buckets=8)
-    idx.refresh(to_epoch=0)
-
-    class Boom(RuntimeError):
-        pass
-
-    idx._commit = lambda *a: (_ for _ in ()).throw(Boom())
-    with pytest.raises(Boom):
-        idx.refresh(to_epoch=1)  # dirs written, manifest NOT swapped
-    idx2 = IncrementalBM25Index(spark, root, sink, num_buckets=8)
-    assert idx2.last_epoch == 0
-    idx2.refresh(to_epoch=1)
-    assert _rows(idx2.read_postings()) == _rows(
-        idx2._posting_rows(sink.read()).select("term", "id", "tf")
-    )
 
 
 def test_param_mismatch_reopen_refusal(spark, events, tmp_path):

@@ -119,40 +119,6 @@ def _r2(df):
     return sorted(tuple(r) for r in df.select("g", "n", "sv").collect())
 
 
-def test_crash_between_state_and_manifest_recovers(spark, tmp_path):
-    sink = _sink(spark, tmp_path, "mor")
-    _load(spark, sink)
-    root = str(tmp_path / "view_crash")
-    view = IncrementalAggView(
-        spark, root, sink, group_cols=["g"],
-        aggs={"n": ("count", None), "sv": ("sum", "v")},
-    )
-    view.refresh(to_epoch=0)
-
-    class Boom(RuntimeError):
-        pass
-
-    real_commit = view._commit
-    view._commit = lambda *a: (_ for _ in ()).throw(Boom())
-    with pytest.raises(Boom):
-        view.refresh(to_epoch=2)  # state_e2 written, manifest NOT swapped
-    view._commit = real_commit
-    assert view.last_epoch == 0  # partial refresh invisible
-
-    view2 = IncrementalAggView(  # fresh open (crash recovery path)
-        spark, root, sink, group_cols=["g"],
-        aggs={"n": ("count", None), "sv": ("sum", "v")},
-    )
-    assert view2.last_epoch == 0
-    view2.refresh(to_epoch=2)  # overwrites the orphan state_e2
-    assert _r2(view2.read()) == _r2(
-        sink.read_as_of(2).groupBy("g").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv"))
-    )
-    gone = view2.vacuum()
-    assert "state_e0" in gone and view2._manifest["state"] not in gone
-
-
 def test_delta_refuses_min_max(spark, tmp_path):
     sink = _sink(spark, tmp_path, "mor")
     with pytest.raises(ValueError, match="not subtractable"):
