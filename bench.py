@@ -143,7 +143,7 @@ def bench_ingest(spark, n_events: int, num_partitions: int) -> dict:
                 shutil.rmtree(root, ignore_errors=True)
                 t0 = time.time()
                 ingest(spark, events, root, n_events, n_epochs=4, parse_mode="native",
-                       num_buckets=32, prune_buckets=True, merge_mode=m)
+                       num_buckets=32, merge_mode=m)
                 dt = min(dt, time.time() - t0)
             per_mode[m] = dt
         dt = per_mode[mode]

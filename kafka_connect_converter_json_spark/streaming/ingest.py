@@ -563,11 +563,9 @@ def replay_quarantine(
     if stored:
         for name, st in SchemaRegistry.from_json(stored).items():
             registry.observe(name, st)
-    for s in observe_envelope_samples(repaired, "value_json", "lsn"):
-        try:
-            registry.observe("SourceChange", infer_envelope_schema_from_sample(spark, s))
-        except Exception:  # noqa: BLE001 — still-corrupt sample: skip
-            continue
+    samples = observe_envelope_samples(repaired, "value_json", "lsn")
+    for st in infer_envelope_schemas_batch(spark, samples):  # skips corrupt ones
+        registry.observe("SourceChange", st)
     env_schema = registry.get("SourceChange")
     if env_schema is None:
         raise ValueError("no parseable envelope among repaired rows and no registry state")

@@ -42,6 +42,7 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +51,8 @@ from pyspark.sql import types as T
 from ..operators.dedup import lww_latest, lww_latest_salted
 
 MANIFEST = "_manifest.json"
+# optional batch columns that feed lineage, never table state
+_LINEAGE_COLS = ("kafka_partition", "kafka_offset")
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -394,6 +397,18 @@ class BucketedMergeSink:
     instead of parquet footers. A manifest without ``schemas`` (written
     before schemas were recorded) gets each snapshot's schema from its
     footers once, cached in memory; its next commit records one.
+
+    Every write goes through one core: ``_prepare`` (sink column order
+    plus ``_bucket``), ``_start_stats`` (the lineage/touched-bucket pass
+    on a second thread), ``_lww`` (one version per key), ``_write_buckets``
+    (one directory per bucket), ``_fold`` (rewrite buckets as their live
+    base ∪ a delta) and ``_commit_epoch`` (one snapshot through the
+    manifest CAS). ``merge_mode`` decides only where an epoch lands:
+    ``mor`` appends its reduced rows as a delta, ``cow`` folds them into
+    the buckets they touch. Staging writes the same delta in both modes,
+    and publishing lands it as a merge would; ``compact()`` is the fold
+    over the pending deltas, and Z-order compaction and ``rebucket()``
+    rewrite every bucket through ``_write_buckets``.
     """
 
     def __init__(
@@ -405,22 +420,13 @@ class BucketedMergeSink:
         op_col: str = "op",
         delete_op: str = "d",
         num_buckets: int = 64,
-        write_repartition: bool = True,
-        persist_batch: bool = False,
-        prune_buckets: bool = True,
         salted_merge: bool = False,
         salt_buckets: int = 32,
         sort_within_buckets: bool = False,
         merge_mode: str = "mor",
         compact_every: int | None = 8,
         bucket_cols: list[str] | None = None,
-        manifest_writer: ManifestWriter | None = None,
     ) -> None:
-        # measured on 1M events / 4 epochs / local[32] (best of 2):
-        #   repartition+persist 13.1s; repartition only 10.5s (default);
-        #   no repartition 24.0s (AQE-coalesced write skews file sizes).
-        # persist only pays when recomputing the batch is expensive
-        # (e.g. a slow upstream join); for scans/generators it loses.
         self.spark = spark
         self.root = root
         self.keys = keys
@@ -428,30 +434,21 @@ class BucketedMergeSink:
         self.op_col = op_col
         self.delete_op = delete_op
         self.num_buckets = num_buckets
-        self.write_repartition = write_repartition
-        self.persist_batch = persist_batch
-        # prune_buckets=True: discover the batch's buckets first and read/
-        # rewrite only those (the 100 TB path — epochs touch a small slice
-        # of the key space). False: skip discovery, read every live bucket,
-        # and run the stats/lineage job CONCURRENTLY with the merge on a
-        # second thread — right when batches touch most buckets anyway
-        # (uniform-update benchmarks), where discovery is pure critical-path
-        # overhead.
-        self.prune_buckets = prune_buckets
         # salted_merge: two-level LWW reduce inside the MERGE (N4) — for
         # pathological per-key skew (one (repo,path) receiving a large
         # fraction of an epoch). Costs one extra (tiny) reduce; off by
         # default since hash-bucketing already spreads *key-space* skew.
         self.salted_merge = salted_merge
         self.salt_buckets = salt_buckets
-        # merge_mode: "mor" (merge-on-read, the default) writes only the
-        # epoch's LWW-reduced DELTA (deletes kept as tombstone markers) —
-        # writes pay O(batch), reads merge base + deltas until
-        # ``compact()`` folds them down. It is the 10^10-event shape:
+        # merge_mode: where an epoch lands. "mor" (merge-on-read, the
+        # default) appends the epoch's LWW-reduced DELTA (deletes kept as
+        # tombstone markers) — writes pay O(batch), reads merge base +
+        # deltas until ``compact()`` folds them down. It is the
+        # 10^10-event shape:
         # epoch cost stops scaling with table size (measured 1.46x COW at
         # 50M events), and it is the mode that holds the >=0.8 N->4N
-        # scaling target. "cow" (copy-on-write) rewrites every touched
-        # bucket per epoch — reads are a plain scan, writes pay
+        # scaling target. "cow" (copy-on-write) folds the epoch into every
+        # bucket it touches — reads are a plain scan, writes pay
         # O(touched table slice); right for read-heavy small tables.
         if merge_mode not in ("cow", "mor"):
             raise ValueError(f"merge_mode must be cow|mor, got {merge_mode!r}")
@@ -487,7 +484,7 @@ class BucketedMergeSink:
                 f"bucket_cols must be a non-empty subset of keys={keys}, got {cols}"
             )
         self.bucket_cols = cols
-        self._writer = manifest_writer or ManifestWriter()
+        self._writer = ManifestWriter()
         # parsed ``schemas`` entries by JSON text, and footer-inferred
         # schemas of legacy snapshots by their file list
         self._parsed_schemas: dict[str, T.StructType] = {}
@@ -501,8 +498,7 @@ class BucketedMergeSink:
         manifest (keys/order_col/num_buckets) — the Iceberg-style 'table
         metadata comes from the catalog' path. The constructor, by
         contrast, validates caller-supplied layout and raises on mismatch."""
-        writer = kwargs.get("manifest_writer") or ManifestWriter()
-        stored = writer.read(os.path.join(root, MANIFEST))
+        stored = ManifestWriter().read(os.path.join(root, MANIFEST))
         if stored is None:
             raise ValueError(f"no sink manifest at {root!r} — nothing to open")
         return cls(
@@ -677,254 +673,186 @@ class BucketedMergeSink:
         ``batch`` columns: keys + order_col + op_col + payload (+ optional
         kafka_partition/kafka_offset for lineage). ``meta`` entries are
         committed into the manifest atomically with the epoch.
+
+        Merge-on-read appends the epoch's per-key winners (tombstones
+        kept) as a delta: the table is never read, so epoch cost is
+        O(batch) regardless of table size. Copy-on-write folds the batch
+        into the buckets it touches; only bucket DISCOVERY blocks (it
+        picks which base files to read, the pruning a real Iceberg MERGE
+        gets from its partition spec). Either way the stats/lineage pass
+        overlaps the write on a second thread, and lineage lands before
+        the manifest flips.
         """
         if epoch in self.committed_epochs():
             return {"epoch": epoch, "skipped": True}
-        self._pending_meta = meta
+        batch_b = self._prepare(batch)
+        stats = self._start_stats(batch_b, epoch)
+        rel = f"data/e{epoch:06d}"
+        if self.merge_mode == "mor":
+            out = self._lww(batch_b)
+            deltas = sorted(self._write_buckets(out, rel, self.num_buckets).values())
+            lineage, touched = stats()
+            return self._commit_epoch(
+                epoch, touched, lineage, out.schema if deltas else None, meta,
+                new_deltas=deltas,
+            )
+        touched = sorted(
+            r["_bucket"] for r in batch_b.select("_bucket").distinct().collect()
+        )
+        buckets, written = self._fold(batch_b, touched, rel)
+        lineage, _ = stats()
+        return self._commit_epoch(
+            epoch, touched, lineage, written, meta, buckets=buckets
+        )
 
-        payload_cols = [
-            c
-            for c in batch.columns
+    # ----- the write core --------------------------------------------------
+
+    def _prepare(self, batch: DataFrame) -> DataFrame:
+        """``batch`` in sink column order (keys, order_col, op_col,
+        payload, lineage columns) plus its ``_bucket``."""
+        lineage = [c for c in _LINEAGE_COLS if c in batch.columns]
+        payload = [
+            c for c in batch.columns
             if c not in self.keys
-            and c not in (self.order_col, self.op_col, "kafka_partition", "kafka_offset")
+            and c not in (self.order_col, self.op_col, *_LINEAGE_COLS)
         ]
+        return batch.select(
+            *self.keys, self.order_col, self.op_col, *payload, *lineage
+        ).withColumn("_bucket", self._bucket_expr())
 
-        batch = batch.select(
-            *self.keys, self.order_col, self.op_col, *payload_cols,
-            *[c for c in ("kafka_partition", "kafka_offset") if c in batch.columns],
-        )
-        merge_fn = self._merge_mor if self.merge_mode == "mor" else self._merge_persisted
-        if self.persist_batch:
-            batch = batch.persist()
+    def _start_stats(self, batch_b: DataFrame, epoch: int, write_lineage: bool = True):
+        """Start ``_stats_pass`` on a second thread, so its job overlaps
+        the write (Spark schedules concurrent jobs from separate
+        threads). Returns a function that waits for the pass and returns
+        its result or re-raises its error."""
+        box: dict = {}
+
+        def run():
             try:
-                return merge_fn(batch, epoch, payload_cols)
-            finally:
-                batch.unpersist()
-        return merge_fn(batch, epoch, payload_cols)
+                box["result"] = self._stats_pass(batch_b, epoch, write_lineage)
+            except Exception as e:  # noqa: BLE001 — re-raised by join()
+                box["error"] = e
 
-    def _merge_mor(self, batch: DataFrame, epoch: int, payload_cols: list[str]) -> dict:
-        """Merge-on-read epoch: LWW-reduce WITHIN the batch only (one
-        version per key per epoch; deletes kept as tombstone markers) and
-        append the result as a bucket-partitioned DELTA directory. The
-        table is never read, so epoch cost is O(batch) regardless of
-        table size; ``read()`` merges base + deltas and ``compact()``
-        folds them back into a base."""
-        batch_b = batch.withColumn("_bucket", self._bucket_expr())
-        # stats/lineage runs CONCURRENTLY with the delta write (same
-        # scheme as the COW no-prune path): the MOR write never needs the
-        # touched-bucket list — `repartition(num_buckets, _bucket)` hashes
-        # to at most the touched buckets' partitions and partitionBy only
-        # writes non-empty dirs — so blocking on the stats scan (a full
-        # pass over the batch's key/lsn columns) was pure serial time
-        # (measured: the ONLY reason the 50M replay read MOR slower than
-        # COW, whose no-prune branch already overlapped it).
-        import threading
+        thread = threading.Thread(target=run, daemon=True)
+        thread.start()
 
-        stats_box: dict = {}
+        def join():
+            thread.join()
+            if "error" in box:
+                raise box["error"]
+            return box["result"]
 
-        def _stats():
-            try:
-                stats_box["result"] = self._stats_pass(batch_b, epoch)
-            except Exception as e:  # noqa: BLE001
-                stats_box["error"] = e
+        return join
 
-        stats_thread = threading.Thread(target=_stats, daemon=True)
-        stats_thread.start()
+    def _lww(self, df: DataFrame) -> DataFrame:
+        """Last-writer-wins reduce: one row per key (and ``_bucket``, when
+        ``df`` carries it) with ``op_col`` kept — an op='d' winner is the
+        tombstone that masks older versions. Lineage columns are dropped.
+        Two-level (salted) under ``salted_merge``: the one place that
+        choice is made."""
+        by = self.keys + (["_bucket"] if "_bucket" in df.columns else [])
+        payload = [
+            c for c in df.columns
+            if c not in by
+            and c not in (self.order_col, self.op_col, *_LINEAGE_COLS)
+        ] + [self.op_col]
+        if self.salted_merge:
+            return lww_latest_salted(df, by, self.order_col, payload, self.salt_buckets)
+        return lww_latest(df, by, self.order_col, payload)
 
-        lww = (
-            (lambda df, k, o, p: lww_latest_salted(df, k, o, p, self.salt_buckets))
-            if self.salted_merge
-            else lww_latest
-        )
-        # op survives: an op='d' winner is the tombstone marker that masks
-        # base/earlier-delta rows at read time
-        reduced = lww(
-            batch_b, self.keys + ["_bucket"], self.order_col,
-            payload_cols + [self.op_col],
-        )
-
-        epoch_rel = f"data/e{epoch:06d}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        if os.path.exists(epoch_dir):  # orphan from a crashed attempt
-            shutil.rmtree(epoch_dir)
-        to_write = (
-            reduced.repartition(self.num_buckets, "_bucket")
-            if self.write_repartition
-            else reduced
-        )
-        if self.sort_within_buckets:
-            to_write = to_write.sortWithinPartitions("_bucket", *self.keys)
-        to_write.write.partitionBy("_bucket").parquet(epoch_dir)
-        stats_thread.join()
-        if "error" in stats_box:
-            raise stats_box["error"]
-        lineage_stats, touched = stats_box["result"]
-
-        written = sorted(
-            f"{epoch_rel}/{d}"
-            for d in os.listdir(epoch_dir)
+    def _write_buckets(
+        self, frame: DataFrame, rel: str, n_parts: int | None
+    ) -> dict[str, str]:
+        """Write ``frame`` (with ``_bucket``) under ``rel`` as one
+        directory per bucket; return ``{bucket: dir}`` for the buckets
+        written. The frame is hash-partitioned on ``_bucket`` into
+        ``n_parts`` tasks (one file per bucket; key-sorted under
+        ``sort_within_buckets``). A Z-order frame (``n_parts=None``)
+        comes laid out already and carries ``_slice``: one file per
+        slice, flattened into its bucket dir."""
+        out = os.path.join(self.root, rel)
+        if os.path.exists(out):  # orphan from a crashed attempt
+            shutil.rmtree(out)
+        slices = ["_slice"] if n_parts is None else []
+        if n_parts is not None:
+            frame = frame.repartition(n_parts, "_bucket")
+            if self.sort_within_buckets:
+                frame = frame.sortWithinPartitions("_bucket", *self.keys)
+        frame.write.partitionBy("_bucket", *slices).parquet(out)
+        if slices:
+            self._flatten_slice_dirs(out)
+        return {
+            d.split("=", 1)[1]: f"{rel}/{d}"
+            for d in os.listdir(out)
             if d.startswith("_bucket=")
-        )
-        stats = {
+        }
+
+    def _fold(
+        self, delta: DataFrame, buckets: list, rel: str
+    ) -> tuple[dict[str, str], T.StructType | None]:
+        """Rewrite ``buckets`` under ``rel`` as their live base rows ∪
+        ``delta`` (LWW, tombstones dropped) — the copy-on-write commit
+        and the compaction rewrite are this one operation. Returns the
+        new live bucket map (a bucket whose rows were all deleted leaves
+        it; other buckets keep their files) and the schema of the frame
+        written (``None`` when no file was)."""
+        live = dict(self._manifest["buckets"])
+        if not buckets:
+            return live, None
+        names = [str(b) for b in buckets]
+        merged = self._live_rows(
+            [live.pop(b) for b in names if b in live], delta.drop("_bucket"),
+            self._snapshot_schema(self._manifest),
+        ).withColumn("_bucket", self._bucket_expr())
+        written = self._write_buckets(merged, rel, len(names))
+        live.update(written)
+        return live, merged.schema if written else None
+
+    def _commit_epoch(
+        self, epoch: int, touched: list, lineage: list[dict],
+        written: T.StructType | None, meta: dict | None,
+        buckets: dict[str, str] | None = None, new_deltas: tuple | list = (),
+        published: bool = False,
+    ) -> dict:
+        """Commit one epoch snapshot through the manifest CAS. Where the
+        epoch landed: ``buckets``, the bucket map after a copy-on-write
+        fold (default: unchanged), and ``new_deltas``, the delta dirs a
+        merge-on-read epoch appends. ``written`` (the schema of the frame
+        written, ``None`` when no file was) widens the table schema;
+        ``meta`` merges into the manifest's meta; a ``published`` epoch
+        leaves the staged area. Returns the epoch entry. A merge-on-read
+        commit then runs the auto-compaction trigger."""
+        entry = {
             "epoch": epoch,
             "touched_buckets": len(touched),
-            "lineage": lineage_stats,
-            "buckets": dict(self._manifest["buckets"]),
-            "deltas": list(self._manifest.get("deltas", [])) + written,
+            "lineage": lineage,
+            "buckets": dict(self._manifest["buckets"]) if buckets is None else buckets,
             # the bucket count THIS snapshot's layout was written under —
             # a later rebucket() changes self.num_buckets, and changelog
             # bucket pruning must probe with the snapshot's own count
             "num_buckets": self.num_buckets,
         }
         manifest = dict(self._manifest)
-        manifest["deltas"] = stats["deltas"]
-        self._record_schema(manifest, stats, to_write.schema if written else None)
-        manifest["epochs"] = manifest["epochs"] + [stats]
-        pending = getattr(self, "_pending_meta", None)
-        if pending:
-            manifest["meta"] = {**manifest.get("meta", {}), **pending}
-            self._pending_meta = None
+        manifest["buckets"] = entry["buckets"]
+        if self.merge_mode == "mor":
+            entry["deltas"] = list(self._manifest.get("deltas", [])) + list(new_deltas)
+            manifest["deltas"] = entry["deltas"]
+        self._record_schema(manifest, entry, written)
+        manifest["epochs"] = manifest["epochs"] + [entry]
+        if meta:
+            manifest["meta"] = {**manifest.get("meta", {}), **meta}
+        if published:
+            staged = dict(manifest.get("staged", {}))
+            staged.pop(str(epoch), None)
+            manifest["staged"] = staged
         self._commit_manifest(manifest)
-        if self.compact_every is not None:
+        if self.merge_mode == "mor" and self.compact_every is not None:
             n_delta_epochs = len({r.split("/")[1] for r in manifest["deltas"]})
             if n_delta_epochs >= self.compact_every:
                 # after the epoch commit (never instead of it): a crash
                 # here just leaves the deltas pending for the next trigger
-                stats = {**stats, "auto_compact": self.compact()}
-        return stats
-
-    def _merge_persisted(self, batch: DataFrame, epoch: int, payload_cols: list[str]) -> dict:
-        batch_b = batch.withColumn("_bucket", self._bucket_expr())
-        buckets_map = dict(self._manifest["buckets"])
-
-        stats_thread = None
-        stats_box: dict = {}
-        if self.prune_buckets:
-            # Only touched-bucket DISCOVERY gates the merge plan (it picks
-            # which bucket files to read — the pruning a real Iceberg
-            # MERGE gets from its partition spec), so only that tiny
-            # distinct blocks; the lineage aggregation (a wider scan over
-            # offsets/lsn) overlaps the merge on a second thread like the
-            # other paths. Lineage still lands BEFORE the manifest flips,
-            # so a committed epoch always has it.
-            import threading
-
-            def _stats():
-                try:
-                    stats_box["result"] = self._stats_pass(batch_b, epoch)
-                except Exception as e:  # noqa: BLE001
-                    stats_box["error"] = e
-
-            stats_thread = threading.Thread(target=_stats, daemon=True)
-            stats_thread.start()
-            touched = sorted(
-                r["_bucket"]
-                for r in batch_b.select("_bucket").distinct().collect()
-            )
-            current_rels = [
-                buckets_map[str(b)] for b in touched if str(b) in buckets_map
-            ]
-        else:
-            # no pruning: merge reads every live bucket; stats/lineage job
-            # runs concurrently off the critical path (Spark schedules
-            # concurrent jobs from separate threads)
-            import threading
-
-            def _stats():
-                try:
-                    stats_box["result"] = self._stats_pass(batch_b, epoch)
-                except Exception as e:  # noqa: BLE001
-                    stats_box["error"] = e
-
-            stats_thread = threading.Thread(target=_stats, daemon=True)
-            stats_thread.start()
-            touched = sorted(int(b) for b in buckets_map)
-            current_rels = list(buckets_map.values())
-
-        cols = [*self.keys, self.order_col, self.op_col, *payload_cols, "_bucket"]
-        sides = batch_b.select(*cols)
-        if current_rels:
-            # read under the live table schema + allowMissingColumns: bucket
-            # files written before a schema evolution lack the new columns;
-            # they read back as null (additive-widening contract, SURVEY.md
-            # N2 / Iceberg ADD COLUMN semantics)
-            cur = (
-                self._read_files(current_rels, self._snapshot_schema(self._manifest))
-                .withColumn(self.op_col, F.lit("u"))
-                .withColumn("_bucket", self._bucket_expr())
-            )
-            sides = sides.unionByName(
-                cur.select(*[c for c in cols if c in cur.columns]),
-                allowMissingColumns=True,
-            )
-
-        # single wide shuffle: LWW over (keys, bucket) with map-side combine
-        # (salted variant adds a second, tiny reduce for hot-key skew)
-        lww = (
-            (lambda df, k, o, p: lww_latest_salted(df, k, o, p, self.salt_buckets))
-            if self.salted_merge
-            else lww_latest
-        )
-        merged = (
-            lww(sides, self.keys + ["_bucket"], self.order_col, payload_cols + [self.op_col])
-            .filter(F.col(self.op_col) != self.delete_op)
-            .drop(self.op_col)
-        )
-
-        epoch_rel = f"data/e{epoch:06d}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        if os.path.exists(epoch_dir):  # orphan from a crashed attempt
-            shutil.rmtree(epoch_dir)
-        n_parts = max(1, len(touched)) if self.prune_buckets else self.num_buckets
-        to_write = (
-            merged.repartition(n_parts, "_bucket")
-            if self.write_repartition
-            else merged  # AQE-coalesced shuffle output; more files per bucket
-        )
-        if self.sort_within_buckets:
-            to_write = to_write.sortWithinPartitions("_bucket", *self.keys)
-        to_write.write.partitionBy("_bucket").parquet(epoch_dir)
-
-        # buckets that still exist after the merge (all-deleted buckets vanish)
-        written = {
-            int(d.split("=", 1)[1]): f"{epoch_rel}/{d}"
-            for d in os.listdir(epoch_dir)
-            if d.startswith("_bucket=")
-        }
-        if self.prune_buckets:
-            for b in touched:
-                if b in written:
-                    buckets_map[str(b)] = written[b]
-                else:
-                    buckets_map.pop(str(b), None)
-        else:
-            # every live bucket was read and rewritten: the written set IS
-            # the new table (absent bucket = fully deleted)
-            buckets_map = {str(b): rel for b, rel in written.items()}
-        stats_thread.join()
-        if "error" in stats_box:
-            raise stats_box["error"]
-        lineage_stats, _ = stats_box["result"]
-
-        stats = {
-            "epoch": epoch,
-            "touched_buckets": len(touched),
-            "lineage": lineage_stats,
-            # snapshot: the full bucket map as of this epoch — enables
-            # time travel (read_as_of) exactly like an Iceberg snapshot
-            "buckets": buckets_map,
-            "num_buckets": self.num_buckets,
-        }
-        manifest = dict(self._manifest)
-        manifest["buckets"] = buckets_map
-        self._record_schema(manifest, stats, to_write.schema if written else None)
-        manifest["epochs"] = manifest["epochs"] + [stats]
-        pending = getattr(self, "_pending_meta", None)
-        if pending:
-            manifest["meta"] = {**manifest.get("meta", {}), **pending}
-            self._pending_meta = None
-        self._commit_manifest(manifest)
-        return stats
+                return {**entry, "auto_compact": self.compact()}
+        return entry
 
     def _stats_pass(
         self, batch_b: DataFrame, epoch: int, write_lineage: bool = True
@@ -978,35 +906,48 @@ class BucketedMergeSink:
         schema: T.StructType | None,
         pre_filter=None,
     ) -> DataFrame:
-        """Base ∪ deltas -> one live row per key (MOR read path): LWW by
-        ``order_col`` across base rows (implicit op='u') and delta rows
-        (op kept, op='d' winners mask the key), then drop tombstones.
-        Both sides are read under the snapshot's table ``schema``, so
-        planning opens no footer. ``pre_filter`` (a Column) is applied
-        BEFORE the LWW reduce — only sound for predicates on columns
-        immutable across a key's versions (the merge keys), where
-        dropping rows cannot flip a winner; it exists so ``read_where``
-        shuffles only matching keys."""
+        """Base ∪ deltas -> one live row per key (MOR read path). Both
+        sides are read under the snapshot's table ``schema``, so planning
+        opens no footer."""
         if not base_rels and not delta_rels:
             raise ValueError("sink is empty — no committed buckets or deltas")
-        parts = []
+        delta = (
+            self._read_files(delta_rels, self._delta_schema(schema))
+            if delta_rels else None
+        )
+        return self._live_rows(base_rels, delta, schema, pre_filter)
+
+    def _live_rows(
+        self,
+        base_rels: list[str],
+        delta: DataFrame | None,
+        schema: T.StructType | None,
+        pre_filter=None,
+    ) -> DataFrame:
+        """Base files ∪ ``delta`` rows -> one live row per key: LWW by
+        ``order_col`` across base rows (implicit op='u') and delta rows
+        (op kept, op='d' winners mask the key), then drop tombstones.
+        Base files are read under ``schema``; columns only one side
+        carries read as null on the other. ``pre_filter`` (a Column) is
+        applied BEFORE the LWW reduce — only sound for predicates on
+        columns immutable across a key's versions (the merge keys),
+        where dropping rows cannot flip a winner; it exists so
+        ``read_where`` shuffles only matching keys."""
+        df = delta
         if base_rels:
-            parts.append(
-                self._read_files(base_rels, schema).withColumn(self.op_col, F.lit("u"))
+            base = self._read_files(base_rels, schema).withColumn(
+                self.op_col, F.lit("u")
             )
-        if delta_rels:
-            parts.append(self._read_files(delta_rels, self._delta_schema(schema)))
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+            df = base if delta is None else base.unionByName(
+                delta, allowMissingColumns=True
+            )
         if pre_filter is not None:
             df = df.filter(pre_filter)
-        if not delta_rels:
+        if delta is None:
             return df.drop(self.op_col)  # pure base: already one row per key
-        payload = [
-            c for c in df.columns
-            if c not in self.keys and c not in (self.order_col, self.op_col)
-        ]
-        merged = lww_latest(df, self.keys, self.order_col, payload + [self.op_col])
-        return merged.filter(F.col(self.op_col) != self.delete_op).drop(self.op_col)
+        return self._lww(df).filter(F.col(self.op_col) != self.delete_op).drop(
+            self.op_col
+        )
 
     def _snapshot_view(self, snap: dict) -> DataFrame:
         """Live rows of a snapshot (an epoch entry, or the manifest)."""
@@ -1327,16 +1268,17 @@ class BucketedMergeSink:
         zorder: list[str] | None = None,
         files_per_bucket: int = 1,
     ) -> dict:
-        """Fold pending MOR deltas into a fresh base (the Iceberg
-        rewrite_data_files / Delta OPTIMIZE analogue): one LWW job over
-        base ∪ deltas, written bucket-partitioned, committed through the
-        same manifest CAS. Readers see the old (base, deltas) snapshot
-        until the commit; prior epoch snapshots keep their delta paths
-        (time travel intact until vacuum). After compaction reads are
-        plain scans again.
+        """Fold pending MOR deltas into the base (the Iceberg
+        rewrite_data_files / Delta OPTIMIZE analogue): the same fold a
+        copy-on-write epoch commits, over the pending deltas, committed
+        through the same manifest CAS. Only buckets with pending deltas
+        are rewritten; every other bucket keeps its base files. Readers
+        see the old (base, deltas) snapshot until the commit; prior epoch
+        snapshots keep their delta paths (time travel intact until
+        vacuum). After compaction reads are plain scans again.
 
-        ``zorder=[cols]`` additionally clusters each bucket along a
-        Morton (Z-order) curve over the named columns — the Delta
+        ``zorder=[cols]`` instead rewrites EVERY bucket, clustered along
+        a Morton (Z-order) curve over the named columns — the Delta
         ``OPTIMIZE ZORDER BY`` / Iceberg ``rewrite_data_files(zorder)``
         analogue — and splits every bucket into ``files_per_bucket``
         equal-count files cut along the curve. Each file then covers a
@@ -1351,41 +1293,27 @@ class BucketedMergeSink:
         16 bits per column, pure JVM bit arithmetic (no UDF); column
         min/max for scaling come from one aggregation job."""
         deltas = list(self._manifest.get("deltas", []))
-        if not deltas and zorder is None:
-            return {"compacted": False, "deltas_folded": 0}
-        if zorder is not None and not self._manifest["buckets"] and not deltas:
+        if not deltas and (zorder is None or not self._manifest["buckets"]):
             return {"compacted": False, "deltas_folded": 0}
         if files_per_bucket < 1:
             raise ValueError(f"files_per_bucket must be >= 1, got {files_per_bucket}")
-        current = self.read()  # the merged view — already tombstone-free
-        seq = len(self._manifest.get("maintenance", []))
-        rel_dir = f"data/c{seq:06d}"
-        out_dir = os.path.join(self.root, rel_dir)
-        if os.path.exists(out_dir):  # orphan from a crashed attempt
-            shutil.rmtree(out_dir)
-        bucketed = current.withColumn("_bucket", self._bucket_expr())
-        if zorder is not None:
-            to_write = self._zorder_clustered(current, bucketed, zorder,
-                                              files_per_bucket)
-            # one file per (bucket, slice): each written file is a
-            # CONTIGUOUS curve segment, so its min/max is tight on every
-            # zorder column. The _slice subdirs then flatten into the
-            # bucket dirs (num_buckets * files_per_bucket metadata
-            # renames on the driver — bounded, no data pass).
-            to_write.write.partitionBy("_bucket", "_slice").parquet(out_dir)
-            self._flatten_slice_dirs(out_dir)
+        rel_dir = f"data/c{len(self._manifest.get('maintenance', [])):06d}"
+        if zorder is None:
+            buckets, written = self._fold(
+                self._read_files(
+                    deltas, self._delta_schema(self._snapshot_schema(self._manifest))
+                ),
+                sorted({r.rsplit("_bucket=", 1)[1] for r in deltas}),
+                rel_dir,
+            )
         else:
-            to_write = bucketed.repartition(self.num_buckets, "_bucket")
-            to_write.write.partitionBy("_bucket").parquet(out_dir)
-        new_map = {
-            d.split("=", 1)[1]: f"{rel_dir}/{d}"
-            for d in os.listdir(out_dir)
-            if d.startswith("_bucket=")
-        }
+            frame = self._zorder_clustered(self.read(), zorder, files_per_bucket)
+            buckets = self._write_buckets(frame, rel_dir, None)
+            written = frame.schema if buckets else None
         manifest = dict(self._manifest)
-        manifest["buckets"] = new_map
+        manifest["buckets"] = buckets
         manifest["deltas"] = []
-        self._record_schema(manifest, None, to_write.schema if new_map else None)
+        self._record_schema(manifest, None, written)
         maint = {"op": "compact", "deltas_folded": len(deltas), "dir": rel_dir}
         if zorder is not None:
             maint["zorder"] = list(zorder)
@@ -1393,7 +1321,9 @@ class BucketedMergeSink:
         manifest["maintenance"] = manifest.get("maintenance", []) + [maint]
         self._commit_manifest(manifest)
         return {"compacted": True, "deltas_folded": len(deltas),
-                "buckets_written": len(new_map)}
+                "buckets_written": sum(
+                    r.startswith(f"{rel_dir}/") for r in buckets.values()
+                )}
 
     @staticmethod
     def _flatten_slice_dirs(out_dir: str) -> None:
@@ -1418,18 +1348,14 @@ class BucketedMergeSink:
                 shutil.rmtree(spath)
 
     def _zorder_clustered(
-        self,
-        current: DataFrame,
-        bucketed: DataFrame,
-        zorder: list[str],
-        files_per_bucket: int,
+        self, current: DataFrame, zorder: list[str], files_per_bucket: int
     ) -> DataFrame:
-        """``bucketed`` re-clustered along the Z-order curve: per-bucket
-        rank over the Morton value cuts ``files_per_bucket`` equal-count
-        slices, rows hash-repartition on (bucket, slice) so every slice
-        lands contiguously in one task (deterministic — no sampling), and
-        an in-task sort leaves each written file a contiguous curve
-        segment."""
+        """``current`` bucketed and re-clustered along the Z-order curve:
+        per-bucket rank over the Morton value cuts ``files_per_bucket``
+        equal-count slices, rows hash-repartition on (bucket, slice) so
+        every slice lands contiguously in one task (deterministic — no
+        sampling), and an in-task sort leaves each written file a
+        contiguous curve segment."""
         from pyspark.sql import Window
 
         if not zorder:
@@ -1460,7 +1386,8 @@ class BucketedMergeSink:
         w_rank = Window.partitionBy("_bucket").orderBy("_z", *self.keys)
         w_cnt = Window.partitionBy("_bucket")
         df = (
-            bucketed.withColumn("_z", _z_interleave(scaled))
+            current.withColumn("_bucket", self._bucket_expr())
+            .withColumn("_z", _z_interleave(scaled))
             .withColumn(
                 "_slice",
                 F.floor(
@@ -1533,13 +1460,12 @@ class BucketedMergeSink:
                     removed.append(f"staged/{d}")
         if dry_run:
             return removed
-        # epochs whose snapshots were vacuumed lose time travel; record that
+        # epochs whose snapshots were vacuumed lose time travel; record
+        # the oldest kept snapshot's id (ids have gaps after a restore or
+        # an offset replay, so it is not max - keep_epochs + 1)
         manifest = dict(self._manifest)
-        manifest["vacuumed_below"] = (
-            max((e["epoch"] for e in manifest["epochs"]), default=-1) - keep_epochs + 1
-            if keep_epochs
-            else max((e["epoch"] for e in manifest["epochs"]), default=-1)
-        )
+        kept = manifest["epochs"][-(keep_epochs or 1):]
+        manifest["vacuumed_below"] = kept[0]["epoch"] if kept else -1
         self._commit_manifest(manifest)
         return removed
 
@@ -1605,74 +1531,20 @@ class BucketedMergeSink:
             return {"epoch": epoch, "skipped": True, "reason": "already committed"}
         if epoch in self.staged_epochs():
             return {"epoch": epoch, "skipped": True, "reason": "already staged"}
-        has_lineage = "kafka_partition" in batch.columns
-        payload_cols = [
-            c
-            for c in batch.columns
-            if c not in self.keys
-            and c not in (self.order_col, self.op_col, "kafka_partition", "kafka_offset")
-        ]
-        batch = batch.select(
-            *self.keys, self.order_col, self.op_col, *payload_cols,
-            *[c for c in ("kafka_partition", "kafka_offset") if c in batch.columns],
-        )
-        batch_b = batch.withColumn("_bucket", self._bucket_expr())
-
-        import threading
-
-        stats_box: dict = {}
-
-        def _stats():
-            try:
-                stats_box["result"] = self._stats_pass(
-                    batch_b, epoch, write_lineage=False
-                )
-            except Exception as e:  # noqa: BLE001
-                stats_box["error"] = e
-
-        stats_thread = threading.Thread(target=_stats, daemon=True)
-        stats_thread.start()
-
-        lww = (
-            (lambda df, k, o, p: lww_latest_salted(df, k, o, p, self.salt_buckets))
-            if self.salted_merge
-            else lww_latest
-        )
-        reduced = lww(
-            batch_b, self.keys + ["_bucket"], self.order_col,
-            payload_cols + [self.op_col],
-        )
-        staged_rel = f"staged/e{epoch:06d}"
-        staged_dir = os.path.join(self.root, staged_rel)
-        if os.path.exists(staged_dir):  # orphan from a crashed attempt
-            shutil.rmtree(staged_dir)
-        to_write = (
-            reduced.repartition(self.num_buckets, "_bucket")
-            if self.write_repartition
-            else reduced
-        )
-        if self.sort_within_buckets:
-            to_write = to_write.sortWithinPartitions("_bucket", *self.keys)
-        to_write.write.partitionBy("_bucket").parquet(staged_dir)
-        stats_thread.join()
-        if "error" in stats_box:
-            raise stats_box["error"]
-        lineage_stats, touched = stats_box["result"]
-
-        written = sorted(
-            f"{staged_rel}/{d}"
-            for d in os.listdir(staged_dir)
-            if d.startswith("_bucket=")
-        )
+        batch_b = self._prepare(batch)
+        stats = self._start_stats(batch_b, epoch, write_lineage=False)
+        out = self._lww(batch_b)
+        written = self._write_buckets(out, f"staged/e{epoch:06d}", self.num_buckets)
+        lineage_stats, touched = stats()
         entry = {
             "epoch": epoch,
             "touched": touched,
             "lineage": lineage_stats,
-            "has_lineage": has_lineage,
-            "delta_rels": written,
+            "has_lineage": "kafka_partition" in batch_b.columns,
+            "delta_rels": sorted(written.values()),
             # staged schema: an EMPTY epoch writes no part files, so the
             # delta frame must be reconstructible from metadata alone
-            "schema": to_write.schema.json(),
+            "schema": out.schema.json(),
             # the bucket count the staged layout was written under:
             # publish refuses if a rebucket() intervened
             "num_buckets": self.num_buckets,
@@ -1942,162 +1814,42 @@ class BucketedMergeSink:
                 f"{entry['num_buckets']} but the sink has since been "
                 f"rebucketed to {self.num_buckets}; discard() and re-stage"
             )
-        if self.merge_mode == "mor":
-            return self._publish_mor(epoch, entry, staged_dir)
-        return self._publish_cow(epoch, entry, staged_dir)
-
-    def _publish_mor(self, epoch: int, entry: dict, staged_dir: str) -> dict:
-        epoch_rel = f"data/e{epoch:06d}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        if os.path.exists(staged_dir):
-            if os.path.exists(epoch_dir):  # orphan from a crashed merge()
-                shutil.rmtree(epoch_dir)
-            os.makedirs(os.path.dirname(epoch_dir), exist_ok=True)
-            os.replace(staged_dir, epoch_dir)  # atomic dir rename
-        elif not os.path.exists(epoch_dir):
+        rel = f"data/e{epoch:06d}"
+        epoch_dir = os.path.join(self.root, rel)
+        # a MOR publish that crashed between its rename and the manifest
+        # commit left the data under data/: it only needs the commit
+        if not os.path.exists(staged_dir) and (
+            self.merge_mode == "cow" or not os.path.exists(epoch_dir)
+        ):
             raise RuntimeError(
                 f"staged data for epoch {epoch} is missing on disk "
                 f"({staged_dir}); discard() and re-stage"
             )
-        # else: crash landed between the rename and the manifest commit —
-        # the data already sits under data/, just finish the commit
-        written = [r.replace("staged/", "data/", 1) for r in entry["delta_rels"]]
+        buckets, new_deltas = None, []
+        if self.merge_mode == "cow":
+            # the staged delta IS a valid merge batch (keys + order + op +
+            # payload; already one version per key — LWW is idempotent)
+            buckets, written = self._fold(
+                self.read_staged_delta(epoch), entry["touched"], rel
+            )
+        else:
+            if os.path.exists(staged_dir):
+                if os.path.exists(epoch_dir):  # orphan from a crashed merge()
+                    shutil.rmtree(epoch_dir)
+                os.makedirs(os.path.dirname(epoch_dir), exist_ok=True)
+                os.replace(staged_dir, epoch_dir)  # atomic dir rename
+            new_deltas = [r.replace("staged/", "data/", 1) for r in entry["delta_rels"]]
+            written = self._staged_delta_schema(entry) if new_deltas else None
         if entry["has_lineage"]:
             self._write_lineage_rows(entry["lineage"], epoch)
-        stats = {
-            "epoch": epoch,
-            "touched_buckets": len(entry["touched"]),
-            "lineage": entry["lineage"],
-            "buckets": dict(self._manifest["buckets"]),
-            "deltas": list(self._manifest.get("deltas", [])) + written,
-            "num_buckets": self.num_buckets,
-        }
-        manifest = dict(self._manifest)
-        manifest["deltas"] = stats["deltas"]
-        self._record_schema(
-            manifest, stats,
-            self._staged_delta_schema(entry) if entry["delta_rels"] else None,
+        result = self._commit_epoch(
+            epoch, entry["touched"], entry["lineage"], written, entry["meta"],
+            buckets=buckets, new_deltas=new_deltas, published=True,
         )
-        manifest["epochs"] = manifest["epochs"] + [stats]
-        if entry["meta"]:
-            manifest["meta"] = {**manifest.get("meta", {}), **entry["meta"]}
-        staged = dict(manifest.get("staged", {}))
-        staged.pop(str(epoch), None)
-        manifest["staged"] = staged
-        self._commit_manifest(manifest)
-        result = {**stats, "published": True}
-        if self.compact_every is not None:
-            n_delta_epochs = len({r.split("/")[1] for r in manifest["deltas"]})
-            if n_delta_epochs >= self.compact_every:
-                result = {**result, "auto_compact": self.compact()}
-        return result
-
-    def _publish_cow(self, epoch: int, entry: dict, staged_dir: str) -> dict:
-        if not os.path.exists(staged_dir):
-            raise RuntimeError(
-                f"staged data for epoch {epoch} is missing on disk "
-                f"({staged_dir}); discard() and re-stage"
-            )
-        if not entry["delta_rels"]:
-            # empty epoch (quiet LSN window): commit the snapshot with the
-            # bucket map unchanged — no data pass, mirror of an empty merge
-            if entry["has_lineage"]:
-                self._write_lineage_rows(entry["lineage"], epoch)
-            stats = {
-                "epoch": epoch,
-                "touched_buckets": 0,
-                "lineage": entry["lineage"],
-                "buckets": dict(self._manifest["buckets"]),
-                "deltas": list(self._manifest.get("deltas", [])),
-                "num_buckets": self.num_buckets,
-            }
-            manifest = dict(self._manifest)
-            self._record_schema(manifest, stats)
-            manifest["epochs"] = manifest["epochs"] + [stats]
-            if entry["meta"]:
-                manifest["meta"] = {**manifest.get("meta", {}), **entry["meta"]}
-            staged = dict(manifest.get("staged", {}))
-            staged.pop(str(epoch), None)
-            manifest["staged"] = staged
-            self._commit_manifest(manifest)
-            shutil.rmtree(staged_dir, ignore_errors=True)
-            return {**stats, "published": True}
-        # the staged delta IS a valid merge batch (keys + order + op +
-        # payload; already one version per key — LWW is idempotent)
-        batch_b = self._read_files(  # _bucket from layout
-            [f"staged/e{epoch:06d}"], self._staged_delta_schema(entry)
-        )
-        payload_cols = [
-            c for c in batch_b.columns
-            if c not in self.keys
-            and c not in (self.order_col, self.op_col, "_bucket")
-        ]
-        buckets_map = dict(self._manifest["buckets"])
-        touched = list(entry["touched"])
-        current_rels = [
-            buckets_map[str(b)] for b in touched if str(b) in buckets_map
-        ]
-        cols = [*self.keys, self.order_col, self.op_col, *payload_cols, "_bucket"]
-        sides = batch_b.select(*cols)
-        if current_rels:
-            cur = (
-                self._read_files(current_rels, self._snapshot_schema(self._manifest))
-                .withColumn(self.op_col, F.lit("u"))
-                .withColumn("_bucket", self._bucket_expr())
-            )
-            sides = sides.unionByName(
-                cur.select(*[c for c in cols if c in cur.columns]),
-                allowMissingColumns=True,
-            )
-        merged = (
-            lww_latest(sides, self.keys + ["_bucket"], self.order_col,
-                       payload_cols + [self.op_col])
-            .filter(F.col(self.op_col) != self.delete_op)
-            .drop(self.op_col)
-        )
-        epoch_rel = f"data/e{epoch:06d}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        if os.path.exists(epoch_dir):  # orphan from a crashed attempt
-            shutil.rmtree(epoch_dir)
-        to_write = (
-            merged.repartition(max(1, len(touched)), "_bucket")
-            if self.write_repartition
-            else merged
-        )
-        if self.sort_within_buckets:
-            to_write = to_write.sortWithinPartitions("_bucket", *self.keys)
-        to_write.write.partitionBy("_bucket").parquet(epoch_dir)
-        written = {
-            int(d.split("=", 1)[1]): f"{epoch_rel}/{d}"
-            for d in os.listdir(epoch_dir)
-            if d.startswith("_bucket=")
-        }
-        for b in touched:
-            if b in written:
-                buckets_map[str(b)] = written[b]
-            else:  # bucket fully deleted by this epoch
-                buckets_map.pop(str(b), None)
-        if entry["has_lineage"]:
-            self._write_lineage_rows(entry["lineage"], epoch)
-        stats = {
-            "epoch": epoch,
-            "touched_buckets": len(touched),
-            "lineage": entry["lineage"],
-            "buckets": buckets_map,
-            "num_buckets": self.num_buckets,
-        }
-        manifest = dict(self._manifest)
-        manifest["buckets"] = buckets_map
-        self._record_schema(manifest, stats, to_write.schema if written else None)
-        manifest["epochs"] = manifest["epochs"] + [stats]
-        if entry["meta"]:
-            manifest["meta"] = {**manifest.get("meta", {}), **entry["meta"]}
-        staged = dict(manifest.get("staged", {}))
-        staged.pop(str(epoch), None)
-        manifest["staged"] = staged
-        self._commit_manifest(manifest)
-        shutil.rmtree(staged_dir)  # crash before this: vacuum() collects
-        return {**stats, "published": True}
+        # a COW publish leaves the staged dir behind; a crash before this
+        # line leaves it to vacuum()
+        shutil.rmtree(staged_dir, ignore_errors=True)
+        return {**result, "published": True}
 
     def discard(self, epoch: int) -> dict:
         """Drop a staged epoch (failed audit / abandoned attempt). The
@@ -3018,28 +2770,15 @@ class BucketedMergeSink:
         instead of being silently overwritten."""
         if new_num_buckets == self.num_buckets:
             return {"rebucketed": False, "num_buckets": self.num_buckets}
-        current = self.read()
-        seq = len(self._manifest.get("maintenance", []))
-        rel_dir = f"data/m{seq:06d}"
-        out_dir = os.path.join(self.root, rel_dir)
-        if os.path.exists(out_dir):  # orphan from a crashed attempt
-            shutil.rmtree(out_dir)
-        bucket = F.pmod(
+        rel_dir = f"data/m{len(self._manifest.get('maintenance', [])):06d}"
+        frame = self.read().withColumn("_bucket", F.pmod(
             F.xxhash64(*[F.col(k) for k in self.bucket_cols]), F.lit(new_num_buckets)
-        )
-        to_write = current.withColumn("_bucket", bucket).repartition(
-            new_num_buckets, "_bucket"
-        )
-        to_write.write.partitionBy("_bucket").parquet(out_dir)
-        new_map = {
-            d.split("=", 1)[1]: f"{rel_dir}/{d}"
-            for d in os.listdir(out_dir)
-            if d.startswith("_bucket=")
-        }
+        ))
+        new_map = self._write_buckets(frame, rel_dir, new_num_buckets)
         manifest = dict(self._manifest)
         manifest["buckets"] = new_map
         manifest["num_buckets"] = new_num_buckets
-        self._record_schema(manifest, None, to_write.schema if new_map else None)
+        self._record_schema(manifest, None, frame.schema if new_map else None)
         # read() above already folded any pending MOR deltas into the
         # rewrite; leaving them listed would only re-apply no-ops
         manifest["deltas"] = []

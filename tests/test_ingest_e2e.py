@@ -105,18 +105,6 @@ def test_idempotent_epoch_redelivery(spark, events, oracle, tmp_path):
     assert _state_hash(_read_state(sink2)) == before == _state_hash(oracle)
 
 
-def test_noprune_mode_identical_state_and_lineage(spark, events, oracle, tmp_path):
-    """prune_buckets=False (concurrent stats, full-bucket merge) must be
-    byte-identical to the pruned path, including lineage totals."""
-    sink = ingest(
-        spark, events, str(tmp_path / "tbl_noprune"), N_EVENTS, n_epochs=3,
-        num_buckets=8, prune_buckets=False,
-    )
-    assert _state_hash(_read_state(sink)) == _state_hash(oracle)
-    lin = sink.read_lineage().toPandas()
-    assert lin["n_events"].sum() == N_EVENTS
-
-
 def test_time_travel_and_vacuum(spark, events, tmp_path):
     """read_as_of(k) reproduces the table state after epoch k (Iceberg
     snapshot-read analogue); vacuum removes superseded COW files while

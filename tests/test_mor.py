@@ -82,6 +82,36 @@ def test_mor_compact_preserves_state_and_clears_deltas(spark, events, tmp_path):
     assert _rows(BucketedMergeSink.open(spark, root).read()) == before
 
 
+def test_mor_compact_rewrites_only_buckets_with_deltas(spark, tmp_path):
+    """compact() folds only the buckets that have pending deltas; every
+    other bucket keeps its base files."""
+    sink = BucketedMergeSink(spark, str(tmp_path / "inc"), keys=["k"],
+                             num_buckets=4, compact_every=None)
+
+    def batch(ks, lsn0):
+        return spark.createDataFrame(
+            [(k, lsn0 + i, "u", f"v{lsn0}") for i, k in enumerate(ks)],
+            "k long, lsn long, op string, v string",
+        )
+
+    sink.merge(batch(range(40), 0), 0)
+    sink.compact()
+    base = dict(sink._manifest["buckets"])
+    assert len(base) == 4
+    keyed = sink.read().withColumn("_b", sink._bucket_expr()).collect()
+    hot = str(keyed[0]._b)
+    sink.merge(batch([r.k for r in keyed if str(r._b) == hot], 100), 1)
+    before = _rows(sink.read())
+    assert sink.compact()["buckets_written"] == 1
+    after = sink._manifest["buckets"]
+    assert {b: r for b, r in after.items() if b != hot} == {
+        b: r for b, r in base.items() if b != hot
+    }
+    assert after[hot] != base[hot]
+    assert _rows(sink.read()) == before
+    assert _rows(sink.read_as_of(1)) == before
+
+
 def test_mor_merge_after_compact(spark, events, tmp_path):
     """Epochs keep committing after a compaction: base + new deltas."""
     root = str(tmp_path / "mc")

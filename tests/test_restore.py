@@ -189,7 +189,14 @@ def test_restore_across_rebucket_restores_bucket_count(spark, tmp_path, mode):
 def test_vacuum_after_restore_keeps_current_state(spark, tmp_path, mode):
     sink = _sink(spark, tmp_path / "s", mode)
     _three_epochs(spark, sink)
+    as_of_3 = _rows(sink.read_as_of(3))
     sink.restore(1, as_epoch=100)
+    # epoch ids 1, 2, 3, 100 have a gap: keeping 2 snapshots keeps 3 and
+    # 100, so epoch 3 must stay time-travel readable and not be flagged
+    sink.vacuum(keep_epochs=2)
+    vacuumed = {r.epoch: r.vacuumed for r in sink.history().collect()}
+    assert vacuumed[2] and not vacuumed[3] and not vacuumed[100]
+    assert _rows(sink.read_as_of(3)) == as_of_3
     before = _rows(sink.read())
     removed = sink.vacuum()
     # the rolled-back epochs' unique files are unreachable now

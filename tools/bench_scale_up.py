@@ -66,7 +66,7 @@ def main() -> None:
         t0 = time.time()
         sink = ingest(
             spark, events.drop("seg"), root, n, n_epochs=epochs,
-            num_buckets=buckets, epoch_source=epoch_src, prune_buckets=False,
+            num_buckets=buckets, epoch_source=epoch_src,
             merge_mode=mode,
         )
         dt = time.time() - t0

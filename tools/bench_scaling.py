@@ -86,7 +86,7 @@ for trial in range({trials}):
     shutil.rmtree(root, ignore_errors=True)
     t0 = time.time()
     ingest(spark, events.drop("seg"), root, n, n_epochs=epochs, num_buckets=16,
-           epoch_source=epoch_src, prune_buckets=False, merge_mode={mode!r})
+           epoch_source=epoch_src, merge_mode={mode!r})
     times.append(round(time.time() - t0, 2))
 dt = min(times)  # best-of-N: the shared sandbox host is noisy
 print("RESULT " + json.dumps({{"cores": cores, "sec": dt, "trials": times,

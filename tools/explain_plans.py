@@ -347,10 +347,7 @@ def main() -> None:
                        compact_every=None)
         zcur = zsink.read()
         zplan = formatted(
-            zsink._zorder_clustered(
-                zcur, zcur.withColumn("_bucket", zsink._bucket_expr()),
-                ["lsn"], 4,
-            )
+            zsink._zorder_clustered(zcur, ["lsn"], 4)
         )
         sections.append((
             "Z-order compaction (per-bucket window rank, no global sort)",
