@@ -31,7 +31,7 @@ import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -241,11 +241,9 @@ def convert_events(
     recovered from the CDC key (``key_json``) JVM-side.
     """
     # Key columns come from the CDC record key (key_json) FIRST, falling
-    # back to the envelope: (a) deletes carry only the key (JC:316-318);
-    # (b) downstream passes that need only keys+lsn+op (the sink's stats/
-    # bucket pass) then never touch from_json at all — Catalyst prunes the
-    # whole envelope parse out of those plans (cuts one full JSON parse
-    # per epoch; measured ~4s/750k events at 8 cores).
+    # back to the envelope: deletes carry only the key (JC:316-318). A
+    # pass that needs only keys+lsn+op still parses the envelope once in
+    # the ingest path, because the corrupt-row filter reads ``_env``.
     key_from_key_json = {
         "repo": F.get_json_object("key_json", "$.repo"),
         "path": F.get_json_object("key_json", "$.path"),
@@ -286,22 +284,21 @@ def convert_events(
     parse_schema = T.StructType(
         list(envelope_schema.fields) + [T.StructField("_corrupt_record", T.StringType(), True)]
     )
-    parsed = events.withColumn(
-        "_env",
-        F.from_json(
-            "value_json",
-            parse_schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-        ),
-    )
+    # Parse once (JC:392-393): a one-element ``inline`` is a barrier that
+    # Catalyst cannot collapse projections or push the ``_corrupt`` filter
+    # through, so ``from_json`` runs once per row instead of being inlined
+    # into every column and the filter that reads ``_env``.
+    parsed = events.select("*", F.inline(F.array(F.struct(F.from_json(
+        "value_json",
+        parse_schema,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
+    ).alias("_env")))))
     sel = []
     for old_path, new_col in _native_key_items(config):
         if new_col in key_from_key_json:
             # CDC contract: the record key carries the merge key for EVERY
-            # event (deletes have no envelope at all, JC:316-318). Taking
-            # it from key_json alone — no envelope fallback — lets Catalyst
-            # drop from_json entirely from plans that only need keys
-            # (the sink's stats/bucket pass: one full parse saved per epoch).
+            # event (deletes have no envelope at all, JC:316-318), so it is
+            # taken from key_json alone, with no envelope fallback.
             col = key_from_key_json[new_col]
         else:
             col = _native_path_expr(old_path, envelope_schema)
@@ -577,8 +574,9 @@ def replay_quarantine(
     qdir = os.path.join(qroot, f"replay-e{epoch:06d}")
     if os.path.exists(qdir):  # orphan from a crashed attempt
         shutil.rmtree(qdir)
-    bad.write.parquet(qdir)
-    still_corrupt = spark.read.parquet(qdir).count()
+    counted = Observation("still_corrupt")
+    bad.observe(counted, F.count(F.lit(1)).alias("n")).write.parquet(qdir)
+    still_corrupt = counted.get["n"]
     if still_corrupt == 0:
         shutil.rmtree(qdir)  # nothing left dead-lettered: no empty pending dir
 

@@ -42,8 +42,8 @@ import hashlib
 import json
 import os
 import shutil
-import threading
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -403,9 +403,14 @@ class BucketedMergeSink:
     on a second thread), ``_lww`` (one version per key), ``_write_buckets``
     (one directory per bucket), ``_fold`` (rewrite buckets as their live
     base ∪ a delta) and ``_commit_epoch`` (one snapshot through the
-    manifest CAS). ``merge_mode`` decides only where an epoch lands:
-    ``mor`` appends its reduced rows as a delta, ``cow`` folds them into
-    the buckets they touch. Staging writes the same delta in both modes,
+    manifest CAS). A write shuffles once: ``_write_buckets`` hash-
+    partitions the unreduced rows on ``_bucket`` into ``min(buckets,
+    defaultParallelism)`` tasks and runs the LWW, grouped by ``(_bucket,
+    *keys)``, inside them; each task writes one file into every bucket dir
+    it holds, so a touched bucket gets one file per epoch on any core
+    count. ``merge_mode`` decides only where an epoch lands: ``mor``
+    appends its reduced rows as a delta, ``cow`` folds them into the
+    buckets they touch. Staging writes the same delta in both modes,
     and publishing lands it as a merge would; ``compact()`` is the fold
     over the pending deltas, and Z-order compaction and ``rebucket()``
     rewrite every bucket through ``_write_buckets``.
@@ -434,10 +439,13 @@ class BucketedMergeSink:
         self.op_col = op_col
         self.delete_op = delete_op
         self.num_buckets = num_buckets
-        # salted_merge: two-level LWW reduce inside the MERGE (N4) — for
-        # pathological per-key skew (one (repo,path) receiving a large
-        # fraction of an epoch). Costs one extra (tiny) reduce; off by
-        # default since hash-bucketing already spreads *key-space* skew.
+        # salted_merge: two-level LWW reduce (N4) for pathological per-key
+        # skew (one (repo,path) receiving a large fraction of an epoch). On
+        # reads the first level shuffles on (keys, salt), so a hot key fans
+        # out over reducers. Writes partition on _bucket first, so all rows
+        # of a key already share a task: there the salt only splits that
+        # task's reduce in two, with no shuffle and no spread. Off by
+        # default since hash-bucketing already spreads key-space skew.
         self.salted_merge = salted_merge
         self.salt_buckets = salt_buckets
         # merge_mode: where an epoch lands. "mor" (merge-on-read, the
@@ -689,12 +697,13 @@ class BucketedMergeSink:
         stats = self._start_stats(batch_b, epoch)
         rel = f"data/e{epoch:06d}"
         if self.merge_mode == "mor":
-            out = self._lww(batch_b)
-            deltas = sorted(self._write_buckets(out, rel, self.num_buckets).values())
+            dirs, schema = self._write_buckets(
+                batch_b, rel, self.num_buckets, self._lww
+            )
             lineage, touched = stats()
             return self._commit_epoch(
-                epoch, touched, lineage, out.schema if deltas else None, meta,
-                new_deltas=deltas,
+                epoch, touched, lineage, schema if dirs else None, meta,
+                new_deltas=sorted(dirs.values()),
             )
         touched = sorted(
             r["_bucket"] for r in batch_b.select("_bucket").distinct().collect()
@@ -733,7 +742,9 @@ class BucketedMergeSink:
             except Exception as e:  # noqa: BLE001 — re-raised by join()
                 box["error"] = e
 
-        thread = threading.Thread(target=run, daemon=True)
+        # inherits the caller's local properties (job group, description),
+        # so the pass's jobs are attributed to the write that started it
+        thread = InheritableThread(target=run, daemon=True)
         thread.start()
 
         def join():
@@ -745,12 +756,13 @@ class BucketedMergeSink:
         return join
 
     def _lww(self, df: DataFrame) -> DataFrame:
-        """Last-writer-wins reduce: one row per key (and ``_bucket``, when
-        ``df`` carries it) with ``op_col`` kept — an op='d' winner is the
-        tombstone that masks older versions. Lineage columns are dropped.
-        Two-level (salted) under ``salted_merge``: the one place that
-        choice is made."""
-        by = self.keys + (["_bucket"] if "_bucket" in df.columns else [])
+        """Last-writer-wins reduce: one row per key (grouped by
+        ``(_bucket, *keys)`` when ``df`` carries ``_bucket``, so a frame
+        already partitioned on ``_bucket`` reduces in place) with
+        ``op_col`` kept — an op='d' winner is the tombstone that masks
+        older versions. Lineage columns are dropped. Two-level (salted)
+        under ``salted_merge``: the one place that choice is made."""
+        by = (["_bucket"] if "_bucket" in df.columns else []) + self.keys
         payload = [
             c for c in df.columns
             if c not in by
@@ -760,13 +772,23 @@ class BucketedMergeSink:
             return lww_latest_salted(df, by, self.order_col, payload, self.salt_buckets)
         return lww_latest(df, by, self.order_col, payload)
 
+    def _latest(self, df: DataFrame) -> DataFrame:
+        """``_lww`` with tombstones dropped: one live row per key."""
+        return self._lww(df).filter(F.col(self.op_col) != self.delete_op).drop(
+            self.op_col
+        )
+
     def _write_buckets(
-        self, frame: DataFrame, rel: str, n_parts: int | None
-    ) -> dict[str, str]:
+        self, frame: DataFrame, rel: str, n_parts: int | None, reduce=None
+    ) -> tuple[dict[str, str], T.StructType]:
         """Write ``frame`` (with ``_bucket``) under ``rel`` as one
         directory per bucket; return ``{bucket: dir}`` for the buckets
-        written. The frame is hash-partitioned on ``_bucket`` into
-        ``n_parts`` tasks (one file per bucket; key-sorted under
+        written and the schema of the frame written. This is the write's
+        one exchange: rows hash-partition on ``_bucket`` into
+        ``min(n_parts, defaultParallelism)`` tasks, so all rows of a
+        bucket meet in one task and ``reduce`` (``_lww`` or ``_latest``)
+        runs inside it with no shuffle of its own. Each task writes one
+        file into every bucket dir it holds (key-sorted under
         ``sort_within_buckets``). A Z-order frame (``n_parts=None``)
         comes laid out already and carries ``_slice``: one file per
         slice, flattened into its bucket dir."""
@@ -775,7 +797,10 @@ class BucketedMergeSink:
             shutil.rmtree(out)
         slices = ["_slice"] if n_parts is None else []
         if n_parts is not None:
-            frame = frame.repartition(n_parts, "_bucket")
+            tasks = min(n_parts, self.spark.sparkContext.defaultParallelism)
+            frame = frame.repartition(tasks, "_bucket")
+            if reduce is not None:
+                frame = reduce(frame)
             if self.sort_within_buckets:
                 frame = frame.sortWithinPartitions("_bucket", *self.keys)
         frame.write.partitionBy("_bucket", *slices).parquet(out)
@@ -785,7 +810,7 @@ class BucketedMergeSink:
             d.split("=", 1)[1]: f"{rel}/{d}"
             for d in os.listdir(out)
             if d.startswith("_bucket=")
-        }
+        }, frame.schema
 
     def _fold(
         self, delta: DataFrame, buckets: list, rel: str
@@ -800,13 +825,13 @@ class BucketedMergeSink:
         if not buckets:
             return live, None
         names = [str(b) for b in buckets]
-        merged = self._live_rows(
+        rows = self._union_rows(
             [live.pop(b) for b in names if b in live], delta.drop("_bucket"),
             self._snapshot_schema(self._manifest),
         ).withColumn("_bucket", self._bucket_expr())
-        written = self._write_buckets(merged, rel, len(names))
+        written, schema = self._write_buckets(rows, rel, len(names), self._latest)
         live.update(written)
-        return live, merged.schema if written else None
+        return live, schema if written else None
 
     def _commit_epoch(
         self, epoch: int, touched: list, lineage: list[dict],
@@ -917,6 +942,22 @@ class BucketedMergeSink:
         )
         return self._live_rows(base_rels, delta, schema, pre_filter)
 
+    def _union_rows(
+        self, base_rels: list[str], delta: DataFrame | None,
+        schema: T.StructType | None,
+    ) -> DataFrame:
+        """Base files (read under ``schema``, implicit op='u') ∪ ``delta``
+        rows, unreduced; columns only one side carries read as null on
+        the other."""
+        if not base_rels:
+            return delta
+        base = self._read_files(base_rels, schema).withColumn(
+            self.op_col, F.lit("u")
+        )
+        return base if delta is None else base.unionByName(
+            delta, allowMissingColumns=True
+        )
+
     def _live_rows(
         self,
         base_rels: list[str],
@@ -927,27 +968,16 @@ class BucketedMergeSink:
         """Base files ∪ ``delta`` rows -> one live row per key: LWW by
         ``order_col`` across base rows (implicit op='u') and delta rows
         (op kept, op='d' winners mask the key), then drop tombstones.
-        Base files are read under ``schema``; columns only one side
-        carries read as null on the other. ``pre_filter`` (a Column) is
-        applied BEFORE the LWW reduce — only sound for predicates on
-        columns immutable across a key's versions (the merge keys),
-        where dropping rows cannot flip a winner; it exists so
-        ``read_where`` shuffles only matching keys."""
-        df = delta
-        if base_rels:
-            base = self._read_files(base_rels, schema).withColumn(
-                self.op_col, F.lit("u")
-            )
-            df = base if delta is None else base.unionByName(
-                delta, allowMissingColumns=True
-            )
+        ``pre_filter`` (a Column) is applied BEFORE the LWW reduce — only
+        sound for predicates on columns immutable across a key's versions
+        (the merge keys), where dropping rows cannot flip a winner; it
+        exists so ``read_where`` shuffles only matching keys."""
+        df = self._union_rows(base_rels, delta, schema)
         if pre_filter is not None:
             df = df.filter(pre_filter)
         if delta is None:
             return df.drop(self.op_col)  # pure base: already one row per key
-        return self._lww(df).filter(F.col(self.op_col) != self.delete_op).drop(
-            self.op_col
-        )
+        return self._latest(df)
 
     def _snapshot_view(self, snap: dict) -> DataFrame:
         """Live rows of a snapshot (an epoch entry, or the manifest)."""
@@ -1308,8 +1338,8 @@ class BucketedMergeSink:
             )
         else:
             frame = self._zorder_clustered(self.read(), zorder, files_per_bucket)
-            buckets = self._write_buckets(frame, rel_dir, None)
-            written = frame.schema if buckets else None
+            buckets, schema = self._write_buckets(frame, rel_dir, None)
+            written = schema if buckets else None
         manifest = dict(self._manifest)
         manifest["buckets"] = buckets
         manifest["deltas"] = []
@@ -1533,8 +1563,9 @@ class BucketedMergeSink:
             return {"epoch": epoch, "skipped": True, "reason": "already staged"}
         batch_b = self._prepare(batch)
         stats = self._start_stats(batch_b, epoch, write_lineage=False)
-        out = self._lww(batch_b)
-        written = self._write_buckets(out, f"staged/e{epoch:06d}", self.num_buckets)
+        written, schema = self._write_buckets(
+            batch_b, f"staged/e{epoch:06d}", self.num_buckets, self._lww
+        )
         lineage_stats, touched = stats()
         entry = {
             "epoch": epoch,
@@ -1544,7 +1575,7 @@ class BucketedMergeSink:
             "delta_rels": sorted(written.values()),
             # staged schema: an EMPTY epoch writes no part files, so the
             # delta frame must be reconstructible from metadata alone
-            "schema": out.schema.json(),
+            "schema": schema.json(),
             # the bucket count the staged layout was written under:
             # publish refuses if a rebucket() intervened
             "num_buckets": self.num_buckets,
@@ -2774,11 +2805,11 @@ class BucketedMergeSink:
         frame = self.read().withColumn("_bucket", F.pmod(
             F.xxhash64(*[F.col(k) for k in self.bucket_cols]), F.lit(new_num_buckets)
         ))
-        new_map = self._write_buckets(frame, rel_dir, new_num_buckets)
+        new_map, schema = self._write_buckets(frame, rel_dir, new_num_buckets)
         manifest = dict(self._manifest)
         manifest["buckets"] = new_map
         manifest["num_buckets"] = new_num_buckets
-        self._record_schema(manifest, None, frame.schema if new_map else None)
+        self._record_schema(manifest, None, schema if new_map else None)
         # read() above already folded any pending MOR deltas into the
         # rewrite; leaving them listed would only re-apply no-ops
         manifest["deltas"] = []
