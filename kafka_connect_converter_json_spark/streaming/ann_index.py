@@ -44,13 +44,15 @@ brute-force cosine top-k).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.similarity import _sq_dist, cosine
 from .derived import KEY_SEP, DeltaIndex  # noqa: F401 (KEY_SEP re-exported)
-from .sink import BucketedMergeSink
+from .sink import BucketedMergeSink, unique_rel
 
 IDX_MANIFEST = "_ann_index_manifest.json"
 
@@ -251,8 +253,8 @@ class IncrementalANNIndex(DeltaIndex):
             .withColumn("_cell", F.col("cell"))
             .drop("cell")
         )
-        delta_rel = f"vecs_e{to_epoch}"
-        delta.write.partitionBy("_cell").parquet(self._fresh_dir(delta_rel))
+        delta_rel = unique_rel(f"vecs_e{to_epoch}")
+        delta.write.partitionBy("_cell").parquet(os.path.join(self.root, delta_rel))
         n_rows = self._read_state(self._VEC_SCHEMA, rels=[delta_rel]).count()
         return {
             "deltas": [*self._manifest["deltas"], delta_rel],

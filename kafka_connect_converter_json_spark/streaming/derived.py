@@ -13,7 +13,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sink import BucketedMergeSink, ConcurrentCommitError, NoChanges
+from .sink import BucketedMergeSink, ConcurrentCommitError, NoChanges, unique_rel
 
 # ASCII unit separator: joins composite sink keys into the index's doc id
 KEY_SEP = "\x1f"
@@ -24,17 +24,17 @@ class DerivedState:
     manifest (``MANIFEST``) that carries a ``version`` and the
     ``last_epoch`` the state reflects.
 
-    Exactly-once: a refresh or compaction first writes its state dirs,
-    then commits by swapping the manifest through the sink's
-    ``ManifestWriter`` — the same atomic-rename seam the sink commits
-    through — under a versioned compare-and-swap. A handle whose loaded
-    version is no longer the stored one raises ``ConcurrentCommitError``
-    and leaves the manifest as it was; reopen and retry. Only the
-    manifest names live state, so a crash between the state write and
-    the swap leaves an orphan dir no read sees: the retry overwrites it
-    and ``vacuum`` collects it. Re-delivering a committed refresh is a
-    no-op, and a range whose changelog is empty (``NoChanges``) commits
-    the new ``last_epoch`` without writing state.
+    Exactly-once: a refresh or compaction first writes its state into
+    fresh ``unique_rel`` dirs, then commits by swapping the manifest
+    through the sink's ``ManifestWriter`` under a versioned
+    compare-and-swap. A handle whose loaded version is no longer the
+    stored one raises ``ConcurrentCommitError`` and leaves the manifest
+    as it was; reopen and retry. Only the manifest names live state and
+    no writer deletes, so a crash before the swap, or a lost swap,
+    leaves an orphan dir no read sees, and ``vacuum`` collects it.
+    Re-delivering a committed refresh is a no-op, and a range whose
+    changelog is empty (``NoChanges``) commits the new ``last_epoch``
+    without writing state.
 
     Subclasses set ``MANIFEST`` and ``_UNCHANGED`` (the extra keys of a
     refresh that folds nothing) and implement ``_check_reopen()`` (refuse
@@ -110,14 +110,6 @@ class DerivedState:
                 gone.append(d)
         return gone
 
-    def _fresh_dir(self, rel: str) -> str:
-        """Path of state dir ``rel``, cleared of any orphan a crashed
-        attempt left there."""
-        path = os.path.join(self.root, rel)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        return path
-
     def _swap(self, nxt: dict) -> None:
         """Commit ``nxt`` as the next manifest version (the
         compare-and-swap of the class docstring)."""
@@ -166,8 +158,8 @@ class DeltaIndex(DerivedState):
         folded = len(self._manifest["deltas"])
         if not folded:
             return {"compacted": False, "deltas_folded": 0}
-        rel = f"base_e{self.last_epoch}"
-        self._write_base(self._fresh_dir(rel))
+        rel = unique_rel(f"base_e{self.last_epoch}")
+        self._write_base(os.path.join(self.root, rel))
         self._swap({**self._manifest, "base": rel, "deltas": []})
         return {"compacted": True, "deltas_folded": folded}
 

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..operators.textdedup import band_frequency_cut, minhash_signatures
 from .derived import KEY_SEP, DeltaIndex  # noqa: F401 (KEY_SEP re-exported)
-from .sink import BucketedMergeSink
+from .sink import BucketedMergeSink, unique_rel
 
 IDX_MANIFEST = "_lsh_index_manifest.json"
 
@@ -180,8 +180,8 @@ class IncrementalLSHIndex(DeltaIndex):
             .filter(F.col("_n") != 0)  # text-unchanged updates net out
             .withColumn("_bucket", self._bucket())
         )
-        delta_rel = f"bands_e{to_epoch}"
-        delta.write.partitionBy("_bucket").parquet(self._fresh_dir(delta_rel))
+        delta_rel = unique_rel(f"bands_e{to_epoch}")
+        delta.write.partitionBy("_bucket").parquet(os.path.join(self.root, delta_rel))
 
         # probe: this epoch's adds vs the post-refresh live view, pruned
         # to the buckets the adds can match (band equality fixes the
@@ -211,8 +211,8 @@ class IncrementalLSHIndex(DeltaIndex):
             )
             .distinct()
         )
-        pairs_rel = f"pairs_e{to_epoch}"
-        pairs_dir = self._fresh_dir(pairs_rel)
+        pairs_rel = unique_rel(f"pairs_e{to_epoch}")
+        pairs_dir = os.path.join(self.root, pairs_rel)
         pairs.write.parquet(pairs_dir)
         n_pairs = (
             self.spark.read.schema("id_a string, id_b string")

@@ -15,11 +15,12 @@ implementation that reproduces the two properties that matter:
    spec + bloom filters.
 
 2. **Exactly-once commits** (N6): the manifest (``_manifest.json``) is the
-   single atomic commit point (``os.replace``). It records committed
-   epochs; re-delivering a committed epoch is a no-op (idempotent —
-   the ``foreachBatch(batch_id)`` dedup pattern). A crash between data
-   write and manifest swap leaves orphan files but never a partially
-   visible epoch.
+   single atomic commit point. It records committed epochs;
+   re-delivering a committed epoch is a no-op (idempotent — the
+   ``foreachBatch(batch_id)`` dedup pattern). Every write lands in a
+   fresh ``unique_rel`` dir and no writer deletes anything, so a crash
+   before the manifest swap, or a swap lost to another handle, leaves
+   only an unnamed dir for ``vacuum``, never a partially visible epoch.
 
 Ordering contract: epochs are applied in LSN order (a binlog/WAL tail is
 ordered); within an epoch LWW by ``order_col`` arbitrates, and the stored
@@ -27,9 +28,9 @@ ordered); within an epoch LWW by ``order_col`` arbitrates, and the stored
 is convergent.
 
 Lineage (N8): per (epoch, kafka_partition) rows — counts, offset ranges,
-max LSN — written under ``lineage/`` *before* the manifest swap, so a
-committed epoch always has its lineage (generalizes getCacheSize()
-introspection, JC:503-505).
+max LSN — ride the epoch's manifest entry, so a committed epoch always
+has its lineage and an uncommitted one has none (generalizes
+getCacheSize() introspection, JC:503-505).
 
 Tombstone handling generalizes the reference's null-value passthrough
 (JC:316-318,371-373) into MERGE DELETE.
@@ -42,6 +43,7 @@ import hashlib
 import json
 import os
 import shutil
+import uuid
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -53,6 +55,18 @@ from ..operators.dedup import lww_latest, lww_latest_salted
 MANIFEST = "_manifest.json"
 # optional batch columns that feed lineage, never table state
 _LINEAGE_COLS = ("kafka_partition", "kafka_offset")
+# the fields of one lineage row of an epoch entry (all bigint)
+_LINEAGE_FIELDS = (
+    "kafka_partition", "n_events", "min_offset", "max_offset", "max_lsn", "epoch"
+)
+
+
+def unique_rel(prefix: str) -> str:
+    """The path one write attempt writes under: ``prefix`` plus a random
+    suffix, so no two attempts — a retry, or a rival handle on the same
+    root — ever share a directory (the Iceberg/Delta rule that data
+    files are uniquely named and immutable)."""
+    return f"{prefix}-{uuid.uuid4().hex}"
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -414,6 +428,12 @@ class BucketedMergeSink:
     and publishing lands it as a merge would; ``compact()`` is the fold
     over the pending deltas, and Z-order compaction and ``rebucket()``
     rewrite every bucket through ``_write_buckets``.
+
+    Every write lands in its own ``unique_rel`` dir under ``data/``
+    (``e…`` merge or COW publish, ``s…`` staged delta, ``c…``
+    compaction, ``m…`` rebucket); no writer renames, overwrites or
+    deletes a path, so a handle that loses the manifest CAS has touched
+    no committed file. ``vacuum`` is the only deleter.
     """
 
     def __init__(
@@ -684,18 +704,18 @@ class BucketedMergeSink:
 
         Merge-on-read appends the epoch's per-key winners (tombstones
         kept) as a delta: the table is never read, so epoch cost is
-        O(batch) regardless of table size. Copy-on-write folds the batch
-        into the buckets it touches; only bucket DISCOVERY blocks (it
-        picks which base files to read, the pruning a real Iceberg MERGE
-        gets from its partition spec). Either way the stats/lineage pass
-        overlaps the write on a second thread, and lineage lands before
-        the manifest flips.
+        O(batch) regardless of table size, and the stats/lineage pass
+        overlaps the write on a second thread. Copy-on-write folds the
+        batch into the buckets it touches, which the stats pass names
+        first (it picks which base files to read, the pruning a real
+        Iceberg MERGE gets from its partition spec). Lineage commits
+        with the epoch's manifest entry.
         """
         if epoch in self.committed_epochs():
             return {"epoch": epoch, "skipped": True}
         batch_b = self._prepare(batch)
         stats = self._start_stats(batch_b, epoch)
-        rel = f"data/e{epoch:06d}"
+        rel = unique_rel(f"data/e{epoch:06d}")
         if self.merge_mode == "mor":
             dirs, schema = self._write_buckets(
                 batch_b, rel, self.num_buckets, self._lww
@@ -705,11 +725,8 @@ class BucketedMergeSink:
                 epoch, touched, lineage, schema if dirs else None, meta,
                 new_deltas=sorted(dirs.values()),
             )
-        touched = sorted(
-            r["_bucket"] for r in batch_b.select("_bucket").distinct().collect()
-        )
+        lineage, touched = stats()
         buckets, written = self._fold(batch_b, touched, rel)
-        lineage, _ = stats()
         return self._commit_epoch(
             epoch, touched, lineage, written, meta, buckets=buckets
         )
@@ -729,7 +746,7 @@ class BucketedMergeSink:
             *self.keys, self.order_col, self.op_col, *payload, *lineage
         ).withColumn("_bucket", self._bucket_expr())
 
-    def _start_stats(self, batch_b: DataFrame, epoch: int, write_lineage: bool = True):
+    def _start_stats(self, batch_b: DataFrame, epoch: int):
         """Start ``_stats_pass`` on a second thread, so its job overlaps
         the write (Spark schedules concurrent jobs from separate
         threads). Returns a function that waits for the pass and returns
@@ -738,7 +755,7 @@ class BucketedMergeSink:
 
         def run():
             try:
-                box["result"] = self._stats_pass(batch_b, epoch, write_lineage)
+                box["result"] = self._stats_pass(batch_b, epoch)
             except Exception as e:  # noqa: BLE001 — re-raised by join()
                 box["error"] = e
 
@@ -781,20 +798,18 @@ class BucketedMergeSink:
     def _write_buckets(
         self, frame: DataFrame, rel: str, n_parts: int | None, reduce=None
     ) -> tuple[dict[str, str], T.StructType]:
-        """Write ``frame`` (with ``_bucket``) under ``rel`` as one
-        directory per bucket; return ``{bucket: dir}`` for the buckets
-        written and the schema of the frame written. This is the write's
-        one exchange: rows hash-partition on ``_bucket`` into
-        ``min(n_parts, defaultParallelism)`` tasks, so all rows of a
-        bucket meet in one task and ``reduce`` (``_lww`` or ``_latest``)
-        runs inside it with no shuffle of its own. Each task writes one
-        file into every bucket dir it holds (key-sorted under
-        ``sort_within_buckets``). A Z-order frame (``n_parts=None``)
-        comes laid out already and carries ``_slice``: one file per
-        slice, flattened into its bucket dir."""
+        """Write ``frame`` (with ``_bucket``) under the fresh ``rel`` (a
+        ``unique_rel``) as one directory per bucket; return ``{bucket:
+        dir}`` for the buckets written and the schema of the frame
+        written. This is the write's one exchange: rows hash-partition
+        on ``_bucket`` into ``min(n_parts, defaultParallelism)`` tasks,
+        so all rows of a bucket meet in one task and ``reduce``
+        (``_lww`` or ``_latest``) runs inside it with no shuffle of its
+        own. Each task writes one file into every bucket dir it holds
+        (key-sorted under ``sort_within_buckets``). A Z-order frame
+        (``n_parts=None``) comes laid out already and carries
+        ``_slice``: one file per slice, flattened into its bucket dir."""
         out = os.path.join(self.root, rel)
-        if os.path.exists(out):  # orphan from a crashed attempt
-            shutil.rmtree(out)
         slices = ["_slice"] if n_parts is None else []
         if n_parts is not None:
             tasks = min(n_parts, self.spark.sparkContext.defaultParallelism)
@@ -845,7 +860,7 @@ class BucketedMergeSink:
         merge-on-read epoch appends. ``written`` (the schema of the frame
         written, ``None`` when no file was) widens the table schema;
         ``meta`` merges into the manifest's meta; a ``published`` epoch
-        leaves the staged area. Returns the epoch entry. A merge-on-read
+        loses its staged entry. Returns the epoch entry. A merge-on-read
         commit then runs the auto-compaction trigger."""
         entry = {
             "epoch": epoch,
@@ -880,14 +895,14 @@ class BucketedMergeSink:
         return entry
 
     def _stats_pass(
-        self, batch_b: DataFrame, epoch: int, write_lineage: bool = True
+        self, batch_b: DataFrame, epoch: int
     ) -> tuple[list[dict], list[int]]:
         """One aggregation job: lineage rows per source partition plus the
-        set of touched buckets (collect_set is tiny: <= num_buckets).
-        ``write_lineage=False`` defers the lineage file (staged epochs
-        write it at publish time, so a discarded epoch leaves no trace)."""
+        set of touched buckets (collect_set is tiny: <= num_buckets). A
+        batch without ``kafka_partition`` yields one row with a null
+        partition: ``history()`` counts it, ``read_lineage()`` skips it."""
         has_lineage = "kafka_partition" in batch_b.columns
-        part = F.col("kafka_partition") if has_lineage else F.lit(0)
+        part = F.col("kafka_partition") if has_lineage else F.lit(None).cast("int")
         rows = (
             batch_b.groupBy(part.alias("kafka_partition"))
             .agg(
@@ -901,26 +916,7 @@ class BucketedMergeSink:
             .collect()
         )
         touched = sorted({b for r in rows for b in r["_buckets"]})
-        if has_lineage and write_lineage:
-            self._write_lineage_rows(rows, epoch)
-        return [
-            {k: r[k] for k in ("kafka_partition", "n_events", "min_offset", "max_offset", "max_lsn", "epoch")}
-            for r in rows
-        ], touched
-
-    def _write_lineage_rows(self, rows, epoch: int) -> None:
-        # tiny (<= source partition count): write driver-side via pyarrow —
-        # no extra Spark job, still parquet-readable by read_lineage
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        lin_dir = os.path.join(self.root, "lineage")
-        os.makedirs(lin_dir, exist_ok=True)
-        cols = ["kafka_partition", "n_events", "min_offset", "max_offset", "max_lsn", "epoch"]
-        table = pa.table({c: [r[c] for r in rows] for c in cols})
-        tmp = os.path.join(lin_dir, f".e{epoch:06d}.parquet.tmp")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(lin_dir, f"e{epoch:06d}.parquet"))
+        return [{k: r[k] for k in _LINEAGE_FIELDS} for r in rows], touched
 
     # ----- read ----------------------------------------------------------
 
@@ -1327,7 +1323,7 @@ class BucketedMergeSink:
             return {"compacted": False, "deltas_folded": 0}
         if files_per_bucket < 1:
             raise ValueError(f"files_per_bucket must be >= 1, got {files_per_bucket}")
-        rel_dir = f"data/c{len(self._manifest.get('maintenance', [])):06d}"
+        rel_dir = unique_rel(f"data/c{len(self._manifest.get('maintenance', [])):06d}")
         if zorder is None:
             buckets, written = self._fold(
                 self._read_files(
@@ -1434,9 +1430,13 @@ class BucketedMergeSink:
         )
 
     def vacuum(self, keep_epochs: int = 0, dry_run: bool = False) -> list[str]:
-        """Delete data directories unreachable from the current bucket map
-        and the last ``keep_epochs`` epoch snapshots (orphans from crashed
-        attempts + superseded copy-on-write files). Returns removed paths.
+        """Delete every ``_bucket=`` dir under ``data/`` (and the legacy
+        ``staged/``) that nothing names: not the live state, the last
+        ``keep_epochs`` epoch snapshots, a tagged snapshot or a staged
+        epoch. That covers superseded copy-on-write and compacted files,
+        discarded or published staged deltas, and the dirs of attempts
+        that crashed or lost the manifest swap. A write dir left with no
+        named bucket goes as a whole. Returns the removed bucket dirs.
         Storage hygiene at scale: without vacuum, COW keeps every epoch's
         full rewrite forever. Snapshots named by a live ``tag()`` are
         PROTECTED regardless of ``keep_epochs`` — a pinned state stays
@@ -1444,50 +1444,31 @@ class BucketedMergeSink:
         ref-retention rule). ``dry_run=True`` returns what WOULD be
         removed without touching disk or manifest (the Delta
         ``VACUUM ... DRY RUN`` analogue)."""
-        keep: set[str] = set(self._manifest["buckets"].values())
-        keep.update(self._manifest.get("deltas", []))  # pending MOR deltas are live
-        for e in self._manifest["epochs"][-keep_epochs:] if keep_epochs else []:
-            keep.update(e["buckets"].values())
-            keep.update(e.get("deltas", []))
-        tagged = {int(e) for e in self._manifest.get("tags", {}).values()}
-        for e in self._manifest["epochs"]:
-            if e["epoch"] in tagged:
-                keep.update(e["buckets"].values())
-                keep.update(e.get("deltas", []))
-        keep_rel = set(keep)
+        m = self._manifest
+        tagged = {int(e) for e in m.get("tags", {}).values()}
+        kept = m["epochs"][-keep_epochs:] if keep_epochs else []
+        snaps = [m, *kept, *(e for e in m["epochs"] if e["epoch"] in tagged)]
+        keep = {r for s in snaps for r in s["buckets"].values()}
+        keep.update(r for s in snaps for r in s.get("deltas", []))
+        keep.update(r for s in m.get("staged", {}).values() for r in s["delta_rels"])
         removed = []
-        data_root = os.path.join(self.root, "data")
-        if not os.path.isdir(data_root):
-            return removed
-        for epoch_dir in sorted(os.listdir(data_root)):
-            full_epoch_rel = f"data/{epoch_dir}"
-            for bucket_dir in sorted(os.listdir(os.path.join(data_root, epoch_dir))):
-                if not bucket_dir.startswith("_bucket="):
+        for area in ("data", "staged"):
+            area_dir = os.path.join(self.root, area)
+            for d in sorted(os.listdir(area_dir)) if os.path.isdir(area_dir) else []:
+                write_dir = os.path.join(area_dir, d)
+                buckets = [
+                    f"{area}/{d}/{b}" for b in sorted(os.listdir(write_dir))
+                    if b.startswith("_bucket=")
+                ]
+                dead = [rel for rel in buckets if rel not in keep]
+                removed += dead
+                if dry_run:
                     continue
-                rel = f"{full_epoch_rel}/{bucket_dir}"
-                if rel not in keep_rel:
-                    if not dry_run:
+                if len(dead) == len(buckets):
+                    shutil.rmtree(write_dir)
+                else:
+                    for rel in dead:
                         shutil.rmtree(os.path.join(self.root, rel))
-                    removed.append(rel)
-            if not dry_run and not any(
-                d.startswith("_bucket=") for d in os.listdir(os.path.join(data_root, epoch_dir))
-            ):
-                shutil.rmtree(os.path.join(data_root, epoch_dir))
-        # staged orphans: directories under staged/ with no manifest entry
-        # (crash between data write and the stage commit, or a COW publish
-        # that crashed after its manifest flip but before cleanup). Live
-        # dirs are named from the manifest's staged EPOCH IDS — an EMPTY
-        # staged epoch has no delta_rels but its directory is still live.
-        staged_root = os.path.join(self.root, "staged")
-        if os.path.isdir(staged_root):
-            live_staged = {
-                f"e{int(e):06d}" for e in self._manifest.get("staged", {})
-            }
-            for d in sorted(os.listdir(staged_root)):
-                if d not in live_staged:
-                    if not dry_run:
-                        shutil.rmtree(os.path.join(staged_root, d))
-                    removed.append(f"staged/{d}")
         if dry_run:
             return removed
         # epochs whose snapshots were vacuumed lose time travel; record
@@ -1500,7 +1481,17 @@ class BucketedMergeSink:
         return removed
 
     def read_lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "lineage"))
+        """One row per (committed epoch, source partition) whose batch
+        carried ``kafka_partition``: event count, offset range and max
+        LSN, built on the driver from the rows each epoch entry holds."""
+        rows = [
+            tuple(r[c] for c in _LINEAGE_FIELDS)
+            for e in self._manifest["epochs"] for r in e.get("lineage", [])
+            if r["kafka_partition"] is not None
+        ]
+        return self.spark.createDataFrame(
+            rows, ", ".join(f"{c} bigint" for c in _LINEAGE_FIELDS)
+        )
 
     # ----- write-audit-publish (staged epochs) ---------------------------
     #
@@ -1511,10 +1502,11 @@ class BucketedMergeSink:
     # declarative expectations against the staged rows and the CANDIDATE
     # table state; ``publish()`` flips visibility atomically through the
     # same manifest CAS every other commit uses (O(1) metadata in MOR
-    # mode — the staged delta directory is renamed, never rewritten);
-    # ``discard()`` drops a failed epoch without trace (its lineage file
-    # is only written at publish). Generalizes the reference's fail-fast
-    # admission (JC:508-549 schema gate) from per-record to per-epoch.
+    # mode — the staged ``data/s…`` delta dirs are committed where they
+    # lie); ``discard()`` drops a failed epoch without trace (lineage
+    # commits only with the epoch; ``vacuum`` removes the unnamed dirs).
+    # Generalizes the reference's fail-fast admission (JC:508-549 schema
+    # gate) from per-record to per-epoch.
 
     def staged_epochs(self) -> set[int]:
         return {int(e) for e in self._manifest.get("staged", {})}
@@ -1542,9 +1534,10 @@ class BucketedMergeSink:
         so at-least-once redelivery is safe). The batch is LWW-reduced
         within itself (one version per key, deletes kept as tombstone
         markers — the MOR delta shape, valid for BOTH sink modes) and
-        written under ``staged/``; the staged entry — including its
-        lineage stats and any ``meta`` — rides the manifest so staging
-        survives crash/restart, but NO reader sees it until ``publish``.
+        written under a fresh ``data/s{epoch}-…`` dir; the staged entry
+        — including its lineage stats and any ``meta`` — rides the
+        manifest so staging survives crash/restart, but NO reader sees it
+        until ``publish``.
 
         ``branch`` labels the staged epoch as part of a named multi-epoch
         chain (the Iceberg audit-BRANCH analogue): stack several epochs
@@ -1562,16 +1555,15 @@ class BucketedMergeSink:
         if epoch in self.staged_epochs():
             return {"epoch": epoch, "skipped": True, "reason": "already staged"}
         batch_b = self._prepare(batch)
-        stats = self._start_stats(batch_b, epoch, write_lineage=False)
+        stats = self._start_stats(batch_b, epoch)
         written, schema = self._write_buckets(
-            batch_b, f"staged/e{epoch:06d}", self.num_buckets, self._lww
+            batch_b, unique_rel(f"data/s{epoch:06d}"), self.num_buckets, self._lww
         )
         lineage_stats, touched = stats()
         entry = {
             "epoch": epoch,
             "touched": touched,
             "lineage": lineage_stats,
-            "has_lineage": "kafka_partition" in batch_b.columns,
             "delta_rels": sorted(written.values()),
             # staged schema: an EMPTY epoch writes no part files, so the
             # delta frame must be reconstructible from metadata alone
@@ -1599,7 +1591,9 @@ class BucketedMergeSink:
         schema = self._staged_delta_schema(entry)
         if not entry["delta_rels"]:
             return self.spark.createDataFrame([], schema).drop("_bucket")
-        return self._read_files([f"staged/e{epoch:06d}"], schema).drop("_bucket")
+        # one read of the write dir: its bucket dirs are all the epoch's
+        write_dir = entry["delta_rels"][0].rsplit("/", 1)[0]
+        return self._read_files([write_dir], schema).drop("_bucket")
 
     @staticmethod
     def _staged_delta_schema(entry: dict) -> T.StructType:
@@ -1788,7 +1782,7 @@ class BucketedMergeSink:
     def fast_forward(self, name: str) -> dict:
         """Land an audited branch: ``publish`` every staged epoch of the
         branch in ascending epoch order (each publish is the same atomic
-        manifest CAS as always — O(1) rename per epoch in MOR mode).
+        manifest CAS as always — metadata-only in MOR mode).
         Idempotent/resumable: a crash mid-way leaves a prefix published;
         re-running skips committed epochs and lands the rest. Refuses —
         before publishing anything — if a ``rebucket()`` intervened
@@ -1818,25 +1812,16 @@ class BucketedMergeSink:
         """Atomically make a staged epoch visible — the commit point of
         write-audit-publish. Idempotent; refuses if a ``rebucket()``
         intervened since staging (the staged layout's bucket hash is
-        stale — ``discard()`` and re-stage). MOR mode publishes by
-        RENAMING the staged delta directory into the data area (O(1), no
-        data pass); COW mode applies the staged delta as a normal
-        copy-on-write merge against the CURRENT base (correct under any
-        interleaving: the delta is LWW-reduced and LWW is idempotent /
-        order-insensitive on ``order_col``). The epoch's lineage file is
-        written only now, so discarded epochs never pollute lineage."""
-        staged_rel = f"staged/e{epoch:06d}"
-        staged_dir = os.path.join(self.root, staged_rel)
+        stale — ``discard()`` and re-stage). MOR mode commits the staged
+        delta dirs as the epoch's deltas (O(1), no data pass); COW mode
+        applies the staged delta as a normal copy-on-write merge against
+        the CURRENT base (correct under any interleaving: the delta is
+        LWW-reduced and LWW is idempotent / order-insensitive on
+        ``order_col``). The epoch's lineage commits only now, so
+        discarded epochs never pollute lineage."""
         if epoch in self.committed_epochs():
-            # redelivery after a successful publish: clean any leftovers
-            if str(epoch) in self._manifest.get("staged", {}):
-                manifest = dict(self._manifest)
-                staged = dict(manifest["staged"])
-                staged.pop(str(epoch))
-                manifest["staged"] = staged
-                self._commit_manifest(manifest)
-            if os.path.exists(staged_dir):
-                shutil.rmtree(staged_dir)
+            if epoch in self.staged_epochs():  # merge() committed it meanwhile
+                self.discard(epoch)
             return {"epoch": epoch, "skipped": True}
         entry = self._staged_entry(epoch)
         if entry["num_buckets"] != self.num_buckets:
@@ -1845,56 +1830,33 @@ class BucketedMergeSink:
                 f"{entry['num_buckets']} but the sink has since been "
                 f"rebucketed to {self.num_buckets}; discard() and re-stage"
             )
-        rel = f"data/e{epoch:06d}"
-        epoch_dir = os.path.join(self.root, rel)
-        # a MOR publish that crashed between its rename and the manifest
-        # commit left the data under data/: it only needs the commit
-        if not os.path.exists(staged_dir) and (
-            self.merge_mode == "cow" or not os.path.exists(epoch_dir)
-        ):
-            raise RuntimeError(
-                f"staged data for epoch {epoch} is missing on disk "
-                f"({staged_dir}); discard() and re-stage"
-            )
-        buckets, new_deltas = None, []
+        buckets, written = None, None
         if self.merge_mode == "cow":
             # the staged delta IS a valid merge batch (keys + order + op +
             # payload; already one version per key — LWW is idempotent)
             buckets, written = self._fold(
-                self.read_staged_delta(epoch), entry["touched"], rel
+                self.read_staged_delta(epoch), entry["touched"],
+                unique_rel(f"data/e{epoch:06d}"),
             )
-        else:
-            if os.path.exists(staged_dir):
-                if os.path.exists(epoch_dir):  # orphan from a crashed merge()
-                    shutil.rmtree(epoch_dir)
-                os.makedirs(os.path.dirname(epoch_dir), exist_ok=True)
-                os.replace(staged_dir, epoch_dir)  # atomic dir rename
-            new_deltas = [r.replace("staged/", "data/", 1) for r in entry["delta_rels"]]
-            written = self._staged_delta_schema(entry) if new_deltas else None
-        if entry["has_lineage"]:
-            self._write_lineage_rows(entry["lineage"], epoch)
+        elif entry["delta_rels"]:
+            written = self._staged_delta_schema(entry)
         result = self._commit_epoch(
             epoch, entry["touched"], entry["lineage"], written, entry["meta"],
-            buckets=buckets, new_deltas=new_deltas, published=True,
+            buckets=buckets, new_deltas=entry["delta_rels"], published=True,
         )
-        # a COW publish leaves the staged dir behind; a crash before this
-        # line leaves it to vacuum()
-        shutil.rmtree(staged_dir, ignore_errors=True)
         return {**result, "published": True}
 
     def discard(self, epoch: int) -> dict:
         """Drop a staged epoch (failed audit / abandoned attempt). The
         epoch can be re-staged afterwards; nothing of it remains visible
-        (no lineage was written at stage time)."""
+        (its lineage only ever rode the staged entry), and ``vacuum``
+        removes its dirs."""
         self._staged_entry(epoch)
         manifest = dict(self._manifest)
         staged = dict(manifest["staged"])
         staged.pop(str(epoch))
         manifest["staged"] = staged
         self._commit_manifest(manifest)
-        staged_dir = os.path.join(self.root, f"staged/e{epoch:06d}")
-        if os.path.exists(staged_dir):
-            shutil.rmtree(staged_dir)
         return {"epoch": epoch, "discarded": True}
 
     def publish_if(self, epoch: int, expectations: dict) -> dict:
@@ -1963,8 +1925,9 @@ class BucketedMergeSink:
     def files(self) -> DataFrame:
         """One row per LIVE parquet data file — the Iceberg ``files``
         metadata table: relative path, kind (``base``/``delta``), bucket
-        id, the source commit dir (``e######`` epoch or ``c######``
-        compaction), row count and byte size. The file LIST comes from
+        id, the source write dir (``e…`` epoch, ``s…`` published staged
+        epoch, ``c…`` compaction or ``m…`` rebucket), row count and byte
+        size. The file LIST comes from
         the manifest's live dirs (bounded by buckets × pending-delta
         epochs — never a recursive storage walk); rows/bytes come from
         each file's parquet FOOTER, opened DISTRIBUTED via mapInPandas
@@ -2032,7 +1995,7 @@ class BucketedMergeSink:
         entries: list[tuple[str, str, int, str]] = []
         for rel, kind in live:
             bucket = int(rel.rsplit("_bucket=", 1)[1])
-            source = rel.split("/")[1]  # e###### or c######
+            source = rel.split("/")[1]  # the write's dir: e…, s…, c… or m…
             d = os.path.join(self.root, rel)
             for fn in sorted(os.listdir(d)):
                 if fn.endswith(".parquet"):
@@ -2387,7 +2350,7 @@ class BucketedMergeSink:
                 )
 
         seq = int(self._manifest.get("stats_seq", 0)) + 1
-        rel = f"stats/s{seq:06d}.json"
+        rel = unique_rel(f"stats/s{seq:06d}") + ".json"
         os.makedirs(os.path.join(self.root, "stats"), exist_ok=True)
         with open(os.path.join(self.root, rel), "w") as fh:
             json.dump({"minmax": merged, "bloom": bloom_merged}, fh)
@@ -2801,7 +2764,7 @@ class BucketedMergeSink:
         instead of being silently overwritten."""
         if new_num_buckets == self.num_buckets:
             return {"rebucketed": False, "num_buckets": self.num_buckets}
-        rel_dir = f"data/m{len(self._manifest.get('maintenance', [])):06d}"
+        rel_dir = unique_rel(f"data/m{len(self._manifest.get('maintenance', [])):06d}")
         frame = self.read().withColumn("_bucket", F.pmod(
             F.xxhash64(*[F.col(k) for k in self.bucket_cols]), F.lit(new_num_buckets)
         ))

@@ -48,7 +48,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .derived import KEY_SEP, DeltaIndex  # noqa: F401 (KEY_SEP re-exported)
-from .sink import BucketedMergeSink, fold_on_driver
+from .sink import BucketedMergeSink, fold_on_driver, unique_rel
 
 IDX_MANIFEST = "_bm25_index_manifest.json"
 
@@ -249,8 +249,8 @@ class IncrementalBM25Index(DeltaIndex):
             .agg(F.sum(F.col("dl") * F.col("_n")).alias("_dl"), F.sum("_n").alias("_n"))
             .filter((F.col("_dl") != 0) | (F.col("_n") != 0))
         )
-        rel = f"e{to_epoch}"
-        out = self._fresh_dir(rel)
+        rel = unique_rel(f"e{to_epoch}")
+        out = os.path.join(self.root, rel)
         post_delta.write.partitionBy("_bucket").parquet(os.path.join(out, "post"))
         dlen_delta.write.parquet(os.path.join(out, "dlen"))
         return {"deltas": [*self._manifest["deltas"], rel]}, {}

@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .derived import DerivedState
-from .sink import BucketedMergeSink
+from .sink import BucketedMergeSink, unique_rel
 
 VIEW_MANIFEST = "_view_manifest.json"
 
@@ -171,8 +171,8 @@ class IncrementalAggView(DerivedState):
             state = self._hybrid_state(changes, to_epoch)
         else:
             state = self._recompute_state(changes, to_epoch)
-        rel = f"state_e{to_epoch}"
-        state.write.parquet(self._fresh_dir(rel))
+        rel = unique_rel(f"state_e{to_epoch}")
+        state.write.parquet(os.path.join(self.root, rel))
         return {"state": rel}, {}
 
     def _live_rels(self) -> set[str]:

@@ -232,7 +232,7 @@ def test_vector_unchanged_update_nets_zero(spark, tmp_path):
     out = idx.refresh(to_epoch=1)
     assert out["refreshed"] and out["rows"] == 0
     assert _rows(idx.read_assignments()) == before
-    delta = os.path.join(str(tmp_path / "i"), "vecs_e1")
+    delta = os.path.join(str(tmp_path / "i"), idx._manifest["deltas"][-1])
     assert spark.read.schema(idx._VEC_SCHEMA).parquet(delta).count() == 0
 
 

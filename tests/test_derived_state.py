@@ -46,36 +46,36 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-# kind -> (open(spark, root, sink), comparable state, dirs a vacuum after
-# refresh(0), refresh(1) drops)
+# kind -> (open(spark, root, sink), comparable state, the dirs of the
+# epoch-0 manifest that refresh(1) supersedes)
 KINDS = {
     "view": (
         lambda spark, root, sink: IncrementalAggView(
             spark, root, sink, ["g"], {"n": ("count", None), "sv": ("sum", "v")}
         ),
         lambda s: _rows(s.read()),
-        ["state_e0"],
+        lambda m: {m["state"]},
     ),
     "lsh": (
         lambda spark, root, sink: IncrementalLSHIndex(
             spark, root, sink, n=2, num_buckets=4
         ),
         lambda s: (_rows(s.read_bands()), _rows(s.read_pairs())),
-        [],
+        lambda m: set(),
     ),
     "ann": (
         lambda spark, root, sink: IncrementalANNIndex(
             spark, root, sink, n_centroids=2
         ),
         lambda s: _rows(s.read_assignments()),
-        [],
+        lambda m: set(),
     ),
     "bm25": (
         lambda spark, root, sink: IncrementalBM25Index(
             spark, root, sink, num_buckets=4
         ),
         lambda s: (_rows(s.read_postings()), _rows(s.read_doclens())),
-        [],
+        lambda m: set(),
     ),
 }
 COMPACTING = {"lsh", "ann", "bm25"}
@@ -131,12 +131,12 @@ def test_crash_before_commit_recovers(spark, sink, reference, tmp_path, kind):
     refresh and then in a compaction: the partial result stays
     invisible, a reopened handle retries it to the crash-free state,
     and vacuum drops what the crash left behind."""
-    open_, state, superseded = KINDS[kind]
+    open_, state, superseded_in = KINDS[kind]
     committed0, at0, at1 = reference[kind]
     root = str(tmp_path / "state")
     shutil.copytree(committed0, root)
     s = open_(spark, root, sink)
-    before = _dirs(root)
+    before, superseded = _dirs(root), superseded_in(_stored(s))
     s._swap = _boom
     with pytest.raises(Boom):
         s.refresh(1)  # state dirs written, manifest NOT swapped
@@ -148,9 +148,11 @@ def test_crash_before_commit_recovers(spark, sink, reference, tmp_path, kind):
 
     s = open_(spark, root, sink)  # fresh open: the crash-recovery path
     assert s.last_epoch == 0 and state(s) == at0  # partial refresh invisible
-    s.refresh(1)  # the retry overwrites the orphans
+    s.refresh(1)  # the retry writes dirs of its own
     assert s.last_epoch == 1 and state(s) == at1
-    assert s.vacuum() == superseded  # superseded state goes, live state stays
+    assert orphans <= _dirs(root)  # and left the orphans alone
+    # superseded state and the orphans go, live state stays
+    assert set(s.vacuum()) == superseded | orphans
     if kind not in COMPACTING:
         assert state(s) == at1
         return
@@ -159,16 +161,19 @@ def test_crash_before_commit_recovers(spark, sink, reference, tmp_path, kind):
     s._swap = _boom
     with pytest.raises(Boom):
         s.compact()  # base written, manifest NOT swapped
-    assert _dirs(root) - before == {"base_e1"}
+    (orphan,) = _dirs(root) - before
+    assert orphan.startswith("base_e1-")
     shutil.copytree(root, str(tmp_path / "crashed_compact"))
     assert open_(spark, str(tmp_path / "crashed_compact"), sink).vacuum() == [
-        "base_e1"
+        orphan
     ]
 
     s = open_(spark, root, sink)
     assert _stored(s) == manifest and state(s) == at1  # compaction invisible
     assert s.compact() == {"compacted": True, "deltas_folded": 2}
-    assert set(s.vacuum()) == set(manifest["deltas"])  # folded deltas go
+    assert _stored(s)["base"] not in (orphan, manifest["base"])
+    # folded deltas and the crashed attempt's base go
+    assert set(s.vacuum()) == set(manifest["deltas"]) | {orphan}
     assert state(s) == at1
 
 

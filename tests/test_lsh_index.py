@@ -151,7 +151,7 @@ def test_text_unchanged_update_nets_zero(spark, tmp_path):
     assert _rows(idx.read_bands()) == before
     # the epoch-1 delta carries zero rows (nothing netted)
     import os
-    delta = os.path.join(str(tmp_path / "i"), "bands_e1")
+    delta = os.path.join(str(tmp_path / "i"), idx._manifest["deltas"][-1])
     assert spark.read.schema(idx._BAND_SCHEMA).parquet(delta).count() == 0
 
 

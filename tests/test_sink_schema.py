@@ -107,9 +107,10 @@ def evolved(spark, tmp_path_factory):
         POST), epoch=4)
     # every bucket holds a post-evolution delta, so a bucket-scoped
     # mergeSchema read would also see ``w``
+    by_epoch = {e["epoch"]: e for e in sink._manifest["epochs"]}
     evolved_buckets = {
-        rel.rsplit("=", 1)[1] for rel in sink._manifest["deltas"]
-        if rel.startswith("data/e000003/")
+        rel.rsplit("=", 1)[1]
+        for rel in set(by_epoch[3]["deltas"]) - set(by_epoch[2]["deltas"])
     }
     assert evolved_buckets == {"0", "1", "2", "3"}
     return BucketedMergeSink.open(spark, root)

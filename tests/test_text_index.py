@@ -199,16 +199,16 @@ def test_text_unchanged_update_nets_zero(spark, tmp_path):
     assert _rows(idx.read_postings()) == before_p
     assert _rows(idx.read_doclens()) == before_d
     # the epoch-1 delta carries zero rows (nothing netted)
-    root = str(tmp_path / "i")
+    delta = os.path.join(str(tmp_path / "i"), idx._manifest["deltas"][-1])
     assert (
         spark.read.schema(idx._POST_SCHEMA)
-        .parquet(os.path.join(root, "e1", "post"))
+        .parquet(os.path.join(delta, "post"))
         .count()
         == 0
     )
     assert (
         spark.read.schema(idx._DLEN_SCHEMA)
-        .parquet(os.path.join(root, "e1", "dlen"))
+        .parquet(os.path.join(delta, "dlen"))
         .count()
         == 0
     )

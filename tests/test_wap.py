@@ -3,7 +3,7 @@ publish pattern as a CDC quality gate. ``stage()`` writes an epoch
 invisibly, ``audit_staged()`` runs declarative expectations against the
 staged delta and the CANDIDATE table state, ``publish()`` flips
 visibility atomically through the same manifest CAS every other commit
-uses (an O(1) directory rename in MOR mode), ``discard()`` drops a
+uses (metadata-only in MOR mode), ``discard()`` drops a
 failed epoch without trace. Generalizes the reference's fail-fast
 admission (JsonConverter.java:508-549 schema gate) from per-record to
 per-epoch."""
@@ -167,9 +167,12 @@ def test_publish_if_gate_and_discard_restage(spark, tmp_path, mode):
     assert _rows(sink.read()) == before
     assert sink.read_staged_delta(2).count() == 5
     # discard: nothing remains, not even lineage
+    staged_rels = sink._staged_entry(2)["delta_rels"]
+    assert staged_rels
     sink.discard(2)
     assert sink.staged_epochs() == set()
-    assert not os.path.exists(os.path.join(sink.root, "staged/e000002"))
+    assert set(staged_rels) <= set(sink.vacuum())
+    assert not any(os.path.exists(os.path.join(sink.root, r)) for r in staged_rels)
     lineage_epochs = {r.epoch for r in sink.read_lineage().collect()}
     assert lineage_epochs == {1}
     # re-stage the fixed batch and publish through the gate
@@ -218,53 +221,34 @@ def test_rebucket_between_stage_and_publish_refuses(spark, tmp_path):
     assert sink.read().count() == 30
 
 
-def test_mor_crash_between_rename_and_manifest_commit_resumes(spark, tmp_path):
-    """Simulate the publish crash window: the staged dir was renamed into
-    data/ but the manifest flip never happened. A publish() retry must
-    finish the commit without data loss or duplication."""
-    import shutil
-
-    sink = _sink(spark, tmp_path / "s", "mor")
-    sink.merge(_mk_batch(spark, range(20), 0), 1)
-    sink.stage(_mk_batch(spark, range(10, 40), 100), 2)
-    staged_dir = os.path.join(sink.root, "staged/e000002")
-    epoch_dir = os.path.join(sink.root, "data/e000002")
-    shutil.move(staged_dir, epoch_dir)  # the rename happened, then "crash"
-    out = sink.publish(2)
-    assert out["published"]
-    assert sink.committed_epochs() == {1, 2}
-    twin = _sink(spark, tmp_path / "twin", "mor")
-    twin.merge(_mk_batch(spark, range(20), 0), 1)
-    twin.merge(_mk_batch(spark, range(10, 40), 100), 2)
-    assert _rows(sink.read()) == _rows(twin.read())
-
-
 def test_crash_before_stage_commit_leaves_restageable_orphan(spark, tmp_path):
     """A crash between the staged data write and the stage's manifest
-    commit leaves an orphan directory: re-stage overwrites it, and
-    vacuum() collects it, while a LIVE staged epoch survives vacuum."""
+    commit leaves an orphan directory: re-stage writes a fresh one
+    beside it, and vacuum() collects the orphan, while a LIVE staged
+    epoch survives vacuum."""
     sink = _sink(spark, tmp_path / "s", "mor")
     sink.merge(_mk_batch(spark, range(20), 0), 1)
     b2 = _mk_batch(spark, range(20, 30), 100)
     sink.stage(b2, 2)
+    orphan = sink._staged_entry(2)["delta_rels"]
     # forge the crash: drop the manifest entry but keep the data dir
     manifest = dict(sink._manifest)
     manifest["staged"] = {}
     sink._commit_manifest(manifest)
-    assert os.path.isdir(os.path.join(sink.root, "staged/e000002"))
-    # re-stage over the orphan works and publishes clean
+    assert orphan and all(os.path.isdir(os.path.join(sink.root, r)) for r in orphan)
+    # re-stage beside the orphan works and publishes clean
     sink.stage(b2, 2)
+    assert not set(sink._staged_entry(2)["delta_rels"]) & set(orphan)
     sink.publish(2)
     assert sink.read().count() == 30
 
     # now a live staged epoch + an orphan dir: vacuum removes ONLY the orphan
     sink.stage(_mk_batch(spark, range(50, 55), 200), 3)
-    orphan = os.path.join(sink.root, "staged/e000099")
-    os.makedirs(orphan)
+    live = sink._staged_entry(3)["delta_rels"]
     removed = sink.vacuum()
-    assert "staged/e000099" in removed
-    assert not os.path.exists(orphan)
-    assert os.path.isdir(os.path.join(sink.root, "staged/e000003"))
+    assert sorted(removed) == sorted(orphan)
+    assert not any(os.path.exists(os.path.join(sink.root, r)) for r in orphan)
+    assert all(os.path.isdir(os.path.join(sink.root, r)) for r in live)
     sink.publish(3)
     assert sink.read().count() == 35
 
@@ -340,21 +324,25 @@ def test_empty_epoch_stage_audit_publish(spark, tmp_path, mode):
 
 def test_vacuum_dry_run_and_empty_staged_survival(spark, tmp_path):
     """dry_run previews exactly what vacuum would remove, touching
-    nothing; and a LIVE staged epoch with ZERO rows (no part dirs, so no
-    delta_rels) must never be collected as an orphan — its directory is
-    named from the manifest's staged epoch ids."""
+    nothing; a live staged epoch's delta dirs are never collected; and a
+    LIVE staged epoch with ZERO rows (no part dirs, so no delta_rels)
+    still publishes after a vacuum."""
     sink = _sink(spark, tmp_path / "vac", "mor")
     sink.merge(_mk_batch(spark, range(30), 0), epoch=1)
     sink.merge(_mk_batch(spark, range(30), 100), epoch=2)
     sink.compact()  # old delta dirs become dead
     sink.stage(_mk_batch(spark, [], 200), epoch=3)  # live EMPTY staged
+    sink.stage(_mk_batch(spark, range(5), 300), epoch=4)  # live staged rows
+    staged = [r for e in (3, 4) for r in sink._staged_entry(e)["delta_rels"]]
+    assert staged
     would = sink.vacuum(dry_run=True)
     assert would  # superseded delta dirs are collectible
-    assert all("staged/e000003" not in p for p in would)
+    assert not set(staged) & set(would)
     assert all(os.path.exists(os.path.join(sink.root, p)) for p in would)
     assert sink._manifest.get("vacuumed_below") is None  # nothing committed
     removed = sink.vacuum()
     assert sorted(removed) == sorted(would)  # the preview told the truth
     out = sink.publish(3)  # the empty staged epoch still lands
     assert out["published"]
-    assert sorted(sink.committed_epochs()) == [1, 2, 3]
+    assert sink.publish(4)["published"]
+    assert sorted(sink.committed_epochs()) == [1, 2, 3, 4]

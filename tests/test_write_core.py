@@ -42,19 +42,29 @@ def test_convert_events_parses_envelope_once(typed):
     assert _from_json_count(stats_cols) == 1
 
 
-def test_mor_merge_jobs_include_stats_pass(spark, typed, tmp_path):
-    """The stats thread inherits the caller's job group, so its jobs are
-    counted with the write's: 2 for the one-exchange write (shuffle map
-    stage, then the write) and 2 for the stats pass."""
+def _merge_jobs(spark, typed, root: str, mode: str) -> int:
     sink = BucketedMergeSink(
-        spark, str(tmp_path / "s"), keys=["repo", "path"], num_buckets=N_BUCKETS,
+        spark, root, keys=["repo", "path"], num_buckets=N_BUCKETS, merge_mode=mode,
     )
     tracker = spark.sparkContext.statusTracker()
     ungrouped = set(tracker.getJobIdsForGroup(None))
     with count_spark_jobs(spark) as n:
         sink.merge(typed.filter(~F.col("_corrupt")).drop("_corrupt"), epoch=0)
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
-    assert n["jobs"] == 4
+    return n["jobs"]
+
+
+def test_mor_merge_jobs_include_stats_pass(spark, typed, tmp_path):
+    """The stats thread inherits the caller's job group, so its jobs are
+    counted with the write's: 2 for the one-exchange write (shuffle map
+    stage, then the write) and 2 for the stats pass."""
+    assert _merge_jobs(spark, typed, str(tmp_path / "s"), "mor") == 4
+
+
+def test_cow_merge_takes_touched_buckets_from_stats_pass(spark, typed, tmp_path):
+    """A copy-on-write merge learns the buckets to fold from the stats
+    pass instead of a distinct-bucket job of its own: the same 2 + 2."""
+    assert _merge_jobs(spark, typed, str(tmp_path / "s"), "cow") == 4
 
 
 def _epochs(seed: int = 11):
@@ -95,6 +105,18 @@ def _diff(old: dict, new: dict) -> set:
     return out
 
 
+def _write_dir(sink, prefix: str) -> str:
+    """The one write dir named by the live manifest whose name starts
+    with ``prefix`` (``data/e000001``, ``data/c000000``...)."""
+    m = sink._manifest
+    dirs = {
+        rel.rsplit("/", 1)[0] for rel in [*m["buckets"].values(), *m["deltas"]]
+        if rel.startswith(f"{prefix}-")
+    }
+    assert len(dirs) == 1, dirs
+    return dirs.pop()
+
+
 def _one_file_per_bucket(spark, root: str, rel: str) -> None:
     dirs = glob.glob(os.path.join(root, rel, "_bucket=*"))
     assert dirs
@@ -117,7 +139,7 @@ def test_layout_and_reads_match_oracle(spark, tmp_path, mode):
         sink.merge(
             spark.createDataFrame(rows, "k string, lsn long, op string, v string"), e
         )
-        _one_file_per_bucket(spark, root, f"data/e{e:06d}")
+        _one_file_per_bucket(spark, root, _write_dir(sink, f"data/e{e:06d}"))
         assert _state(sink.read()) == _oracle(epochs, e)
 
     def check_history():
@@ -132,6 +154,6 @@ def test_layout_and_reads_match_oracle(spark, tmp_path, mode):
     check_history()
     if mode == "mor":
         assert sink.compact()["compacted"]
-        _one_file_per_bucket(spark, root, "data/c000000")
+        _one_file_per_bucket(spark, root, _write_dir(sink, "data/c000000"))
         assert _state(sink.read()) == _oracle(epochs, N_EPOCHS - 1)
         check_history()
