@@ -13,9 +13,11 @@ split (JC:84-93: instruction cache; JC:392-393: hot path):
 - ``"reference"`` — ``mapInPandas`` converter with full reference
   semantics (strict intermediates, array-head, map-first-value, canonical
   payload). Python executes per batch; use when semantics matter most.
-- ``"native"``    — the registry observes/widens the envelope schema
-  (driver-side compile step), then the hot path is pure JVM:
-  ``from_json`` + column extraction + ``to_json`` payload, whole-stage
+- ``"native"``    — the registry compiles the envelope schema on the
+  driver (``observe_epoch``): each epoch it widens until it resolves
+  every configured key path that any envelope carries, probing only the
+  paths it lacks, so an epoch with none missing costs no job. Then the
+  hot path is pure JVM: ``from_json`` + column extraction, whole-stage
   codegen end-to-end. This is the 100 TB path: zero Python in the loop.
 
 Epochs are LSN ranges (a binlog tail is ordered); the sink's manifest is
@@ -28,7 +30,6 @@ from __future__ import annotations
 
 import os
 import shutil
-from concurrent.futures import ThreadPoolExecutor
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -40,7 +41,10 @@ from ..operators.extract import convert_stream
 from ..plans.registry import SchemaRegistry
 from .sink import BucketedMergeSink, fold_on_driver
 
-TARGET_COLS = ("repo", "path", "commit", "lang", "content")
+#: target columns read from the CDC record key (``key_json``) before the
+#: envelope, with their JSONPath there: deletes carry only the key
+#: (JC:316-318)
+KEY_FROM_KEY_JSON = {"repo": "$.repo", "path": "$.path"}
 
 
 def default_config() -> ConverterConfig:
@@ -81,8 +85,8 @@ def infer_envelope_schemas_batch(
     without submitting a Spark job. Samples that are not JSON objects
     yield no entry. A corrupt sample makes the JSON parser raise while
     the batch folds; the samples are then folded one by one so the good
-    ones still observe (the rare path — corrupt envelopes are already
-    filtered to the quarantine channel before they win a sample)."""
+    ones still observe (the rare path — the sampler already skips
+    envelopes that do not parse as JSON objects)."""
     if not samples:
         return []
     try:
@@ -105,88 +109,14 @@ def infer_envelope_schemas_batch(
 
 
 def infer_envelope_schema(spark: SparkSession, events: DataFrame, value_col: str) -> T.StructType:
-    """Driver-side schema inference from one sampled envelope (the
-    registry 'observe' step; cheap — one take(1))."""
+    """Driver-side schema inference from the first non-null envelope (one
+    take(1)), for one-shot callers outside the ingest loops."""
     sample = (
         events.filter(F.col(value_col).isNotNull()).select(value_col).limit(1).collect()
     )
     if not sample:
         return T.StructType([])
     return infer_envelope_schema_from_sample(spark, sample[0][0])
-
-
-#: pseudo-random envelopes sampled per epoch for registry observe, in
-#: addition to the first/last-by-LSN rows. More seeds = better coverage of
-#: fields that appear only in a minority of rows (JSON omits null fields).
-OBSERVE_SAMPLE_SEEDS = 4
-
-
-def observe_envelope_samples(
-    batch: DataFrame, value_col: str = "value_json", order_col: str = "lsn",
-    seeds: int = OBSERVE_SAMPLE_SEEDS,
-) -> list[str]:
-    """Distinct envelope samples from one epoch in a SINGLE aggregation job:
-    min/max by ``order_col`` (epoch boundaries — where evolution lands)
-    plus ``seeds`` hash-picked rows (min_by keyed by xxhash64(seed,
-    order_col) — deterministic pseudo-random spread across the epoch).
-    Hashing the 8-byte order column, NOT the envelope string, keeps the
-    per-row cost of the scan trivial; one aggregation replaces the two
-    take(1)/TakeOrdered jobs of r1 and covers mid-epoch-only fields."""
-    nn = batch.filter(F.col(value_col).isNotNull())
-    aggs = [
-        F.min_by(value_col, order_col).alias("_first"),
-        F.max_by(value_col, order_col).alias("_last"),
-    ] + [
-        F.min_by(value_col, F.xxhash64(F.lit(i), F.col(order_col))).alias(f"_s{i}")
-        for i in range(seeds)
-    ]
-    rows = nn.agg(*aggs).collect()
-    if not rows or rows[0][0] is None:
-        return []
-    return sorted({v for v in rows[0] if v is not None})
-
-
-def observe_envelope_samples_pruned(
-    batch: DataFrame, value_col: str = "value_json", order_col: str = "lsn",
-    op_col: str = "op", delete_op: str = "d", seeds: int = OBSERVE_SAMPLE_SEEDS,
-) -> list[str]:
-    """Two-job variant of ``observe_envelope_samples`` that never scans
-    the envelope column end-to-end: job 1 aggregates ONLY the 8-byte
-    ``order_col`` (+ the tiny op column) to pick the first/last/seeded
-    sample LSNs; job 2 point-fetches just those rows' envelopes, which a
-    parquet-backed source serves from the few row groups whose min/max
-    straddle the picked LSNs. The full-column scan the one-job form pays
-    (~0.5s per 250k-event epoch at 32 cores — 15-20%% of steady-state
-    epoch time, and proportionally worse as envelopes grow) becomes two
-    near-free jobs. Tombstones are excluded by op, not by
-    ``value_col IS NOT NULL``, precisely so job 1 stays off the wide
-    column. If any picked LSN yields no envelope (null/corrupt boundary
-    row), the one-job form — which samples among NON-NULL envelopes — is
-    rerun as a fallback, so boundary samples are never silently lost;
-    that pays the wide-column scan only on the rare corrupt-boundary
-    path. The point-fetch is bounded with ``limit()``: ``order_col``
-    need not be unique, and without the bound every row sharing a picked
-    LSN would be pulled to the driver."""
-    nn = batch.filter(F.col(op_col) != delete_op)
-    aggs = [F.min(order_col).alias("_first"), F.max(order_col).alias("_last")] + [
-        F.min_by(order_col, F.xxhash64(F.lit(i), F.col(order_col))).alias(f"_s{i}")
-        for i in range(seeds)
-    ]
-    rows = nn.agg(*aggs).collect()
-    if not rows or rows[0][0] is None:
-        return []
-    lsns = sorted({v for v in rows[0] if v is not None})
-    fetched = (
-        batch.filter(F.col(order_col).isin(lsns) & F.col(value_col).isNotNull())
-        .select(order_col, value_col)
-        .limit(4 * len(lsns))
-        .collect()
-    )
-    if {r[0] for r in fetched} != set(lsns):
-        # a picked row carried no envelope — re-pick among rows that DO
-        # (the one-job form's semantics), instead of losing the sample
-        return observe_envelope_samples(batch, value_col, order_col, seeds)
-    return sorted({r[1] for r in fetched})
 
 
 def _native_key_items(config: ConverterConfig) -> list[tuple[str, str]]:
@@ -202,28 +132,112 @@ def _native_key_items(config: ConverterConfig) -> list[tuple[str, str]]:
 
 def _native_path_expr(dotted: str, schema: T.StructType):
     """Compile a dotted path against the registry's (possibly widened)
-    envelope schema. A segment the schema does not (yet) carry compiles to
-    NULL — pre-evolution epochs read the new column as null, which is the
-    additive-widening contract (SURVEY.md N2). Array segments unwrap to
-    element [0] (JC:561-562); map segments to the first value in key order
-    (deterministic surrogate, SURVEY.md §2.1 O9)."""
+    envelope schema into ``(expr, probe)``: ``expr`` reads it from the
+    parsed ``_env``, or is None where the schema lacks a segment (read as
+    null, the additive-widening contract, SURVEY.md N2); ``probe`` is its
+    JSONPath in a raw envelope. Array segments unwrap to element [0] in
+    both (JC:561-562); map segments to the first value in key order
+    (SURVEY.md §2.1 O9), which no JSONPath expresses: no probe."""
     cur_type: T.DataType = schema
-    expr = F.col("_env")
-    for seg in dotted.split("."):
+    expr, probe = F.col("_env"), "$"
+    segs = dotted.split(".")
+    for i, seg in enumerate(segs):
         if isinstance(cur_type, T.ArrayType):
-            expr = F.element_at(expr, 1)
+            expr, probe = F.element_at(expr, 1), probe and probe + "[0]"
             cur_type = cur_type.elementType
         if isinstance(cur_type, T.MapType):
-            expr = F.element_at(F.map_values(F.map_from_entries(
-                F.array_sort(F.map_entries(expr)))), 1)
+            expr, probe = F.element_at(F.map_values(F.map_from_entries(
+                F.array_sort(F.map_entries(expr)))), 1), None
             cur_type = cur_type.valueType
         if not isinstance(cur_type, T.StructType) or seg not in cur_type.fieldNames():
-            return F.lit(None).cast("string")
-        expr = expr[seg]
+            return None, probe and ".".join([probe, *segs[i:]])
+        expr, probe = expr[seg], probe and f"{probe}.{seg}"
         cur_type = cur_type[seg].dataType
     if isinstance(cur_type, T.ArrayType):  # leaf unwrap: array head
         expr = F.element_at(expr, 1)
-    return expr
+    return expr, probe
+
+
+def _prune_to_paths(dt: T.DataType, paths: list[list[str]]) -> T.DataType:
+    """``dt`` keeping only the fields that the split dotted ``paths`` walk,
+    through array elements and map values as ``_native_path_expr`` does;
+    the last field of a path keeps its whole type. Parsing with it, a
+    field that the sink never reads cannot make an envelope corrupt by
+    changing its JSON type (``from_json`` makes every field nullable)."""
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_prune_to_paths(dt.elementType, paths))
+    if isinstance(dt, T.MapType):
+        return T.MapType(dt.keyType, _prune_to_paths(dt.valueType, paths))
+    if not isinstance(dt, T.StructType) or [] in paths:
+        return dt
+    walked = {p[0] for p in paths}
+    return T.StructType([
+        T.StructField(f.name, _prune_to_paths(f.dataType, [p[1:] for p in paths if p[0] == f.name]))
+        for f in dt.fields if f.name in walked
+    ])
+
+
+def observe_envelope_samples_pruned(
+    batch: DataFrame, probes: list[str], with_first: bool
+) -> list[str]:
+    """In ONE aggregation over ``batch``: per JSONPath in ``probes``, the
+    first parseable envelope by ``lsn`` carrying a non-null value there,
+    plus, with ``with_first``, the first parseable envelope. Null and
+    unparseable envelopes never win, and at most ``len(probes) + 1``
+    distinct samples return, however many rows share an ``lsn``."""
+    parseable = F.json_object_keys("value_json").isNotNull()
+    # the carrier test first: ``&`` short-circuits, so only carriers pay
+    # the validity parse
+    conds = [F.get_json_object("value_json", p).isNotNull() & parseable for p in probes]
+    if with_first:
+        conds.append(parseable)
+    row = batch.agg(
+        *[F.min_by("value_json", F.when(c, F.col("lsn"))) for c in conds]
+    ).collect()[0]
+    return sorted({v for v in row if v is not None})
+
+
+def restore_registry(sink: BucketedMergeSink, registry: SchemaRegistry | None) -> SchemaRegistry:
+    """``registry`` (fresh when None) widened with the snapshot committed
+    with the sink's last epoch (N2+N7): a field observed only in committed
+    epochs must not read as null after a resume."""
+    registry = registry or SchemaRegistry()
+    stored = sink.meta().get("registry")
+    if stored:
+        for name, st in SchemaRegistry.from_json(stored).items():
+            registry.observe(name, st)
+    return registry
+
+
+def _envelope_key_paths(config: ConverterConfig) -> list[str]:
+    """The configured key paths read from the envelope (not ``key_json``)."""
+    return [old for old, new in _native_key_items(config) if new not in KEY_FROM_KEY_JSON]
+
+
+def observe_epoch(
+    spark: SparkSession, batch: DataFrame, config: ConverterConfig, registry: SchemaRegistry,
+    sample_first: bool,
+) -> T.StructType | None:
+    """Widen ``registry`` until it resolves every envelope key path that
+    any row of ``batch`` carries, and return its schema (None while
+    nothing was ever observed). The sink stores only key paths, so this
+    observation is complete. No job runs when no path is missing;
+    otherwise one aggregation finds carriers. ``sample_first`` (implied
+    while the registry is empty) also observes the first parseable
+    envelope, so a key path whose type changed is widened to its new
+    type: ``replay_quarantine`` sets it for rows that were quarantined
+    for such a change."""
+    current = registry.get("SourceChange")
+    walks = [_native_path_expr(path, current or T.StructType([]))
+             for path in _envelope_key_paths(config)]
+    probes = [probe for expr, probe in walks if expr is None and probe is not None]
+    sample_first = sample_first or current is None
+    if not sample_first and not probes:
+        return current
+    samples = observe_envelope_samples_pruned(batch, probes, sample_first)
+    for inferred in infer_envelope_schemas_batch(spark, samples):
+        registry.observe("SourceChange", inferred)
+    return registry.get("SourceChange")
 
 
 def convert_events(
@@ -231,7 +245,6 @@ def convert_events(
     config: ConverterConfig,
     parse_mode: str = "native",
     envelope_schema: T.StructType | None = None,
-    include_payload: bool = False,
     include_raw: bool = False,
 ) -> DataFrame:
     """events(lsn, op, schema_name, value_json, key_json, kafka_*) ->
@@ -240,13 +253,10 @@ def convert_events(
     Tombstones carry no envelope (JC:316-318); their merge keys are
     recovered from the CDC key (``key_json``) JVM-side.
     """
-    # Key columns come from the CDC record key (key_json) FIRST, falling
-    # back to the envelope: deletes carry only the key (JC:316-318). A
-    # pass that needs only keys+lsn+op still parses the envelope once in
+    # A pass that needs only keys+lsn+op still parses the envelope once in
     # the ingest path, because the corrupt-row filter reads ``_env``.
     key_from_key_json = {
-        "repo": F.get_json_object("key_json", "$.repo"),
-        "path": F.get_json_object("key_json", "$.path"),
+        col: F.get_json_object("key_json", path) for col, path in KEY_FROM_KEY_JSON.items()
     }
 
     if parse_mode == "reference":
@@ -266,11 +276,9 @@ def convert_events(
             if new_col in key_from_key_json:
                 col = F.coalesce(key_from_key_json[new_col], col)
             sel.append(col.alias(new_col))
-        tail = [F.col(config.payload_column).alias("payload")] if include_payload else []
-        if include_raw:
-            # raw envelope + key kept for the quarantine side output —
-            # corrupt rows stay inspectable/repairable/replayable (O19)
-            tail += [F.col("value_json"), F.col("key_json")]
+        # raw envelope + key kept for the quarantine side output — corrupt
+        # rows stay inspectable/repairable/replayable (O19)
+        tail = [F.col("value_json"), F.col("key_json")] if include_raw else []
         return conv.select(
             *sel, "lsn", "op", "kafka_partition", "kafka_offset", *tail,
             F.col("_error").isNotNull().alias("_corrupt"),
@@ -278,6 +286,10 @@ def convert_events(
 
     if envelope_schema is None:
         raise ValueError("native parse mode requires an envelope schema (registry-compiled)")
+    # only the fields the key paths walk are parsed: a row is corrupt when
+    # it is not JSON or a walked field has an unexpected type
+    envelope_schema = _prune_to_paths(
+        envelope_schema, [path.split(".") for path in _envelope_key_paths(config)])
     # corrupt-record channel: PERMISSIVE from_json yields a struct of nulls
     # (not a null struct) for partially-parseable input, so corruption is
     # detected via the dedicated corrupt-record column, exactly
@@ -301,14 +313,14 @@ def convert_events(
             # taken from key_json alone, with no envelope fallback.
             col = key_from_key_json[new_col]
         else:
-            col = _native_path_expr(old_path, envelope_schema)
+            col = _native_path_expr(old_path, envelope_schema)[0]
+            if col is None:
+                col = F.lit(None)
         sel.append(col.cast("string").alias(new_col))
-    tail = [F.to_json(F.col("_env").dropFields("_corrupt_record")).alias("payload")] if include_payload else []
-    if include_raw:
-        # raw envelope + key kept for the quarantine side output — corrupt
-        # rows stay inspectable/repairable/replayable (O19). Catalyst prunes
-        # these from the merge path once they are dropped there.
-        tail += [F.col("value_json"), F.col("key_json")]
+    # raw envelope + key kept for the quarantine side output — corrupt rows
+    # stay inspectable/repairable/replayable (O19). Catalyst prunes these
+    # from the merge path once they are dropped there.
+    tail = [F.col("value_json"), F.col("key_json")] if include_raw else []
     # Without this flag a corrupt UPDATE would LWW-win with null content.
     corrupt = F.col("value_json").isNotNull() & (
         F.col("_env").isNull() | F.col("_env._corrupt_record").isNotNull()
@@ -339,6 +351,31 @@ class IngestAuditError(RuntimeError):
         )
 
 
+def epoch_committer(audit: dict | None, audit_on_fail: str):
+    """Check ``audit_on_fail`` and return ``commit(sink, typed, epoch,
+    meta, table)``, the write-audit-publish (WAP) gate of ``ingest`` and
+    ``route_ingest``: a merge without ``audit``, else stage (a no-op if a
+    crashed run already staged the epoch), audit, then publish or raise
+    :class:`IngestAuditError`, discarding first on ``"discard"``."""
+    if audit_on_fail not in ("keep", "discard"):
+        raise ValueError("audit_on_fail must be 'keep' or 'discard'")
+
+    def commit(sink: BucketedMergeSink, typed: DataFrame, epoch: int,
+               meta: dict | None, table: str | None) -> None:
+        if audit is None:
+            sink.merge(typed, epoch, meta=meta)
+            return
+        sink.stage(typed, epoch, meta=meta)
+        report = sink.audit_staged(epoch, audit)
+        if not report["passed"]:
+            if audit_on_fail == "discard":
+                sink.discard(epoch)
+            raise IngestAuditError(epoch, report, table=table)
+        sink.publish(epoch)
+
+    return commit
+
+
 def ingest(
     spark: SparkSession,
     events: DataFrame,
@@ -352,7 +389,6 @@ def ingest(
     fail_after_epochs: int | None = None,
     epoch_source=None,
     quarantine: bool = False,
-    pipeline_observe: bool = True,
     epoch_offset: int = 0,
     lsn_lo: int = 0,
     audit: dict | None = None,
@@ -367,11 +403,9 @@ def ingest(
     directly (binlog-tail property: an epoch reads only its own LSN
     range) instead of filtering ``events`` — for file-backed sources the
     filter path gets the same effect from parquet min/max pruning.
-    ``pipeline_observe`` (default on) prefetches the NEXT epoch's
-    envelope samples and schema inference on a second job-submission
-    thread while the current epoch's merge runs, removing its driver
-    round-trips of serial time per epoch; parity-tested byte-identical
-    to the serial form (test_pipelined_observe_parity).
+    In native mode each epoch first runs ``observe_epoch``, which submits
+    no job when the registry already resolves every envelope key path and
+    one aggregation otherwise.
     ``epoch_offset``/``lsn_lo`` shift the epoch ids and the LSN window
     start so a binlog TAIL can continue a sink whose earlier epochs were
     committed by another phase (snapshot bootstrap — see
@@ -391,117 +425,56 @@ def ingest(
     like the plain path: a crash between stage and publish re-audits the
     already-staged epoch on the next run and lands it without rewriting.
     """
-    if audit_on_fail not in ("keep", "discard"):
-        raise ValueError("audit_on_fail must be 'keep' or 'discard'")
+    commit = epoch_committer(audit, audit_on_fail)
     config = config or default_config()
-    registry = registry or SchemaRegistry()
     sink = BucketedMergeSink(
         spark, sink_root, keys=["repo", "path"], order_col="lsn",
         num_buckets=num_buckets, **sink_kwargs,
     )
-
-    # Restore the registry snapshot committed with the last epoch (N2+N7):
-    # a resume must NOT re-infer from scratch — a field observed only in
-    # already-committed epochs would otherwise be silently dropped from
-    # from_json and read as null after the crash.
-    stored_registry = sink.meta().get("registry")
-    if stored_registry:
-        for name, st in SchemaRegistry.from_json(stored_registry).items():
-            registry.observe(name, st)
+    registry = restore_registry(sink, registry)
 
     per_epoch = max(1, -(-(n_events - lsn_lo) // n_epochs))  # ceil
     done = 0
     committed = sink.committed_epochs()
-    todo = [
-        e for e in range(epoch_offset, epoch_offset + n_epochs) if e not in committed
-    ]
-
-    def _epoch_batch(epoch: int) -> DataFrame:
-        rel = epoch - epoch_offset
-        lo, hi = lsn_lo + rel * per_epoch, lsn_lo + (rel + 1) * per_epoch
+    for epoch in range(epoch_offset, epoch_offset + n_epochs):
+        if epoch in committed:
+            continue
+        lo = lsn_lo + (epoch - epoch_offset) * per_epoch
+        hi = lo + per_epoch
         if epoch_source is not None:
-            return epoch_source(lo, hi)
-        return events.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi))
+            batch = epoch_source(lo, hi)
+        else:
+            batch = events.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi))
 
-    def _observe(batch: DataFrame) -> list[T.StructType]:
-        samples = observe_envelope_samples_pruned(batch, "value_json", "lsn")
-        return infer_envelope_schemas_batch(spark, samples)
+        env_schema = None
+        if parse_mode == "native":
+            # observe in epoch order, so the registry snapshot committed
+            # with epoch k reflects exactly epochs <= k
+            env_schema = observe_epoch(spark, batch, config, registry, sample_first=False)
+            if env_schema is None:
+                raise ValueError("no envelope observed — empty first epoch with no registry state")
 
-    # Observation pipelining: the sample-pick/point-fetch jobs and the
-    # schema fold for epoch k+1 are read-only on the source, so they can
-    # run on a second job-submission thread WHILE epoch k's merge occupies
-    # the cluster — their driver round-trips of pure serial time per epoch
-    # move off the critical path. Ordering is preserved where it matters: the
-    # prefetch only COMPUTES the inferred schemas; registry.observe still
-    # happens on this thread in epoch order, so the registry snapshot
-    # committed with epoch k reflects exactly epochs <= k (a crash/resume
-    # sees the same state as the serial form).
-    pool = ThreadPoolExecutor(max_workers=1) if (
-        pipeline_observe and parse_mode == "native" and len(todo) > 1
-    ) else None
-    prefetched: dict[int, object] = {}
-    try:
-        for idx, epoch in enumerate(todo):
-            batch = _epoch_batch(epoch)
-
-            env_schema = None
-            if parse_mode == "native":
-                # registry observe per epoch (N2): widen over SEVERAL sampled
-                # envelopes, not just one — JSON envelopes omit null fields, so
-                # a field present only in some rows must still be observed or
-                # from_json reads it as null. One aggregation job collects the
-                # first/last envelopes by LSN plus hash-picked pseudo-random
-                # rows spread across the epoch (min_by with independent seeds).
-                fut = prefetched.pop(epoch, None)
-                inferred_list = fut.result() if fut is not None else _observe(batch)
-                for inferred in inferred_list:
-                    registry.observe("SourceChange", inferred)
-                env_schema = registry.get("SourceChange")
-                if env_schema is None:
-                    raise ValueError("no envelope observed — empty first epoch with no registry state")
-                if pool is not None and idx + 1 < len(todo):
-                    nxt = todo[idx + 1]
-                    prefetched[nxt] = pool.submit(_observe, _epoch_batch(nxt))
-
-            typed = convert_events(batch, config, parse_mode, env_schema, include_raw=quarantine)
-            if quarantine:
-                # bad-record side output (O19): corrupt envelopes never reach
-                # the MERGE (a corrupt update must not LWW-win with nulls);
-                # written before the epoch commits so replay re-quarantines.
-                # Carries the raw value_json/key_json so quarantined records
-                # can be inspected, repaired, and replayed.
-                bad = typed.filter(F.col("_corrupt")).drop("_corrupt")
-                qdir = os.path.join(sink_root, "quarantine", f"e{epoch:06d}")
-                if os.path.exists(qdir):
-                    shutil.rmtree(qdir)
-                bad.write.parquet(qdir)
-                typed = typed.drop("value_json", "key_json")
-            typed = typed.filter(~F.col("_corrupt")).drop("_corrupt")
-            # the registry snapshot commits atomically WITH the epoch, so the
-            # checkpoint always carries the schema state that produced it
-            meta = {"registry": registry.to_json()} if parse_mode == "native" else None
-            if audit is None:
-                sink.merge(typed, epoch, meta=meta)
-            else:
-                # WAP gate: stage (no-op if a crashed prior run already
-                # staged this epoch), audit, publish-or-fail
-                sink.stage(typed, epoch, meta=meta)
-                report = sink.audit_staged(epoch, audit)
-                if not report["passed"]:
-                    if audit_on_fail == "discard":
-                        sink.discard(epoch)
-                    raise IngestAuditError(epoch, report)
-                sink.publish(epoch)
-            done += 1
-            if fail_after_epochs is not None and done >= fail_after_epochs:
-                raise RuntimeError(f"injected crash after {done} epochs (test hook)")
-    finally:
-        if pool is not None:
-            # a crash mid-merge must not hang on an in-flight prefetch; the
-            # prefetch is read-only so abandoning it is safe
-            for f in prefetched.values():
-                f.cancel()
-            pool.shutdown(wait=False)
+        typed = convert_events(batch, config, parse_mode, env_schema, include_raw=quarantine)
+        if quarantine:
+            # bad-record side output (O19): corrupt envelopes never reach
+            # the MERGE (a corrupt update must not LWW-win with nulls);
+            # written before the epoch commits so replay re-quarantines.
+            # Carries the raw value_json/key_json so quarantined records
+            # can be inspected, repaired, and replayed.
+            bad = typed.filter(F.col("_corrupt")).drop("_corrupt")
+            qdir = os.path.join(sink_root, "quarantine", f"e{epoch:06d}")
+            if os.path.exists(qdir):
+                shutil.rmtree(qdir)
+            bad.write.parquet(qdir)
+            typed = typed.drop("value_json", "key_json")
+        typed = typed.filter(~F.col("_corrupt")).drop("_corrupt")
+        # the registry snapshot commits atomically WITH the epoch, so the
+        # checkpoint always carries the schema state that produced it
+        meta = {"registry": registry.to_json()} if parse_mode == "native" else None
+        commit(sink, typed, epoch, meta, None)
+        done += 1
+        if fail_after_epochs is not None and done >= fail_after_epochs:
+            raise RuntimeError(f"injected crash after {done} epochs (test hook)")
     return sink
 
 
@@ -553,17 +526,11 @@ def replay_quarantine(
     )
     repaired = repair(raw)
 
-    # registry: resume from the committed snapshot, then observe the
-    # repaired envelopes (a repair may reveal fields the corrupt form hid)
-    registry = registry or SchemaRegistry()
-    stored = sink.meta().get("registry")
-    if stored:
-        for name, st in SchemaRegistry.from_json(stored).items():
-            registry.observe(name, st)
-    samples = observe_envelope_samples(repaired, "value_json", "lsn")
-    for st in infer_envelope_schemas_batch(spark, samples):  # skips corrupt ones
-        registry.observe("SourceChange", st)
-    env_schema = registry.get("SourceChange")
+    # registry: resume from the committed snapshot, then learn every key
+    # path the repaired envelopes carry that it lacks (a repair may reveal
+    # paths the corrupt form hid); still-corrupt rows never teach it
+    registry = restore_registry(sink, registry)
+    env_schema = observe_epoch(spark, repaired, config, registry, sample_first=True)
     if env_schema is None:
         raise ValueError("no parseable envelope among repaired rows and no registry state")
 

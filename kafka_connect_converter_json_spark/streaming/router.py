@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from ..config import ConverterConfig
 from ..operators.extract import convert_stream
+from .ingest import epoch_committer
 from .sink import BucketedMergeSink
 
 UNKNOWN_POLICIES = ("error", "drop", "quarantine")
@@ -117,8 +118,7 @@ def route_ingest(
     """
     if unknown not in UNKNOWN_POLICIES:
         raise ValueError(f"unknown= must be one of {UNKNOWN_POLICIES}, got {unknown!r}")
-    if audit_on_fail not in ("keep", "discard"):
-        raise ValueError("audit_on_fail must be 'keep' or 'discard'")
+    commit = epoch_committer(audit, audit_on_fail)
     tables = list(config.schema_names)
     key_cols = table_key_columns(config)
     for t in tables:
@@ -177,18 +177,7 @@ def route_ingest(
                 typed = conv.filter(
                     (F.col("schema_name") == t) & F.col("_error").isNull()
                 ).select(*key_cols[t], order_col, op_col, payload_col)
-                if audit is None:
-                    sinks[t].merge(typed, epoch)
-                else:
-                    from .ingest import IngestAuditError
-
-                    sinks[t].stage(typed, epoch)
-                    report = sinks[t].audit_staged(epoch, audit)
-                    if not report["passed"]:
-                        if audit_on_fail == "discard":
-                            sinks[t].discard(epoch)
-                        raise IngestAuditError(epoch, report, table=t)
-                    sinks[t].publish(epoch)
+                commit(sinks[t], typed, epoch, None, t)
                 merges_done += 1
                 if fail_after is not None and merges_done >= fail_after:
                     raise RuntimeError(

@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..config import ConverterConfig
-from .ingest import convert_events, default_config, infer_envelope_schema
+from .ingest import convert_events, default_config, observe_epoch, restore_registry
 from .sink import BucketedMergeSink
 
 EVENT_SCHEMA = T.StructType(
@@ -62,22 +62,26 @@ def stream_ingest(
     for tests); False runs continuously. Restart with the same
     checkpoint_dir resumes from the last committed source offset, and
     the sink's idempotent commits absorb any batch re-delivery.
+
+    Each micro-batch observes like an ``ingest`` epoch: the registry is
+    restored from the sink's last commit, widened until it resolves every
+    key path the batch carries, and committed with the batch.
     """
     config = config or default_config()
     events = spark.readStream.schema(EVENT_SCHEMA).parquet(source_dir)
-
-    # driver-side compile step (registry observe) from a static sample
-    static = spark.read.schema(EVENT_SCHEMA).parquet(source_dir)
-    env_schema = infer_envelope_schema(spark, static, "value_json")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sink = BucketedMergeSink(
             spark, sink_root, keys=["repo", "path"], order_col="lsn",
             num_buckets=num_buckets, **sink_kwargs,
         )
+        registry = restore_registry(sink, None)
+        # before any envelope is observed the empty schema still reads keys
+        env_schema = observe_epoch(
+            spark, batch_df, config, registry, sample_first=False) or T.StructType([])
         typed = convert_events(batch_df, config, "native", env_schema)
         typed = typed.filter(~typed["_corrupt"]).drop("_corrupt")
-        sink.merge(typed, epoch=int(batch_id))
+        sink.merge(typed, epoch=int(batch_id), meta={"registry": registry.to_json()})
 
     writer = events.writeStream.foreachBatch(process).option(
         "checkpointLocation", os.path.join(checkpoint_dir)

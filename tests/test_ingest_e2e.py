@@ -218,56 +218,210 @@ def test_concurrent_commit_detected(spark, tmp_path):
 
 
 def test_envelope_sampler_corrupt_boundary_rows(spark):
-    """The pruned sampler picks LSNs off the 8-byte column only — if a
-    boundary row's envelope is null it must fall back to sampling among
-    NON-NULL envelopes (the one-job form), not silently lose the sample."""
+    """Null and unparseable envelopes never win a sample: the first
+    parseable envelope and the first parseable carrier of each probed
+    path are taken instead, so no sample is silently lost."""
     from kafka_connect_converter_json_spark.streaming.ingest import (
-        observe_envelope_samples,
         observe_envelope_samples_pruned,
     )
 
-    rows = [(i, "u", f'{{"n":{i}}}') for i in range(1, 50)]
-    rows.append((0, "u", None))    # corrupt FIRST row (min lsn)
-    rows.append((50, "u", None))   # corrupt LAST row (max lsn)
+    rows = [(i, "u", f'{{"n":{i}}}') for i in range(2, 50)]
+    rows += [(0, "u", None), (1, "u", '{"n":1,"x":1,'), (50, "u", None)]
+    rows += [(60, "u", '{"n":60,"x":2}'), (70, "u", '{"n":70,"x":3}')]
     df = spark.createDataFrame(rows, "lsn long, op string, value_json string")
-    got = observe_envelope_samples_pruned(df, "value_json", "lsn")
-    want = observe_envelope_samples(df, "value_json", "lsn")
-    assert got == want
-    assert '{"n":1}' in got and '{"n":49}' in got  # non-null boundaries kept
+    got = observe_envelope_samples_pruned(df, ["$.x"], True)
+    assert got == ['{"n":2}', '{"n":60,"x":2}']
+    assert observe_envelope_samples_pruned(df, ["$.x"], False) == ['{"n":60,"x":2}']
+    # nothing carries the path and no first sample was asked for
+    assert observe_envelope_samples_pruned(df, ["$.y"], False) == []
 
 
 def test_envelope_sampler_nonunique_order_col(spark):
-    """order_col collisions must not pull every colliding row to the
-    driver — the point-fetch is limit()-bounded and the result stays a
-    small distinct sample set."""
+    """``lsn`` collisions must not pull every colliding row to the driver:
+    each aggregate picks one envelope, so at most ``len(probes) + 1``
+    samples return."""
     from kafka_connect_converter_json_spark.streaming.ingest import (
         observe_envelope_samples_pruned,
     )
 
-    # 500 rows all sharing lsn=7, plus distinct boundaries
-    rows = [(7, "u", f'{{"dup":{i}}}') for i in range(500)]
+    # 500 rows all sharing lsn=7, each carrying both probed paths
+    rows = [(7, "u", f'{{"dup":{i},"a":1,"b":{{"c":2}}}}') for i in range(500)]
     rows += [(1, "u", '{"first":1}'), (9, "u", '{"last":1}')]
     df = spark.createDataFrame(rows, "lsn long, op string, value_json string")
-    got = observe_envelope_samples_pruned(df, "value_json", "lsn")
-    assert '{"first":1}' in got and '{"last":1}' in got
-    assert len(got) <= 4 * 6  # bounded by limit(4 * len(picked_lsns))
+    probes = ["$.a", "$.b.c"]
+    got = observe_envelope_samples_pruned(df, probes, True)
+    assert '{"first":1}' in got
+    assert 2 <= len(got) <= len(probes) + 1
+    assert all('"dup":' in g for g in got if g != '{"first":1}')
 
 
-def test_pipelined_observe_parity(spark, events, oracle, tmp_path):
-    """Observation pipelining (prefetching epoch k+1's envelope samples +
-    schema inference under epoch k's merge) must be invisible: final
-    state AND the committed registry snapshot are byte-identical to the
-    serial form."""
+def _sparse_lang_events(spark, n: int, seed: int):
+    """``gen_events`` with ``lang`` kept in about 2% of envelopes and
+    stripped from the rest, including the first and last by LSN."""
+    from pyspark.sql import functions as F
+
+    ev = gen_events(spark, n, n_repos=20, paths_per_repo=30, seed=seed)
+    keep = (F.pmod(F.xxhash64("lsn", F.lit(seed)), F.lit(50)) == 0) & F.col("lsn").between(
+        n // 10, n - n // 10)
+    return ev.withColumn(
+        "value_json",
+        F.when(keep, F.col("value_json")).otherwise(
+            F.regexp_replace("value_json", r'"lang":"[^"]*",', "")),
+    )
+
+
+def _duckdb_lww(parquet_dir: str) -> list[tuple]:
+    """(repo, path, lsn, commit, lang, sha256(content)) of the live rows:
+    last writer by lsn per (repo, path), deletes dropped."""
+    import duckdb
+
+    return sorted(duckdb.sql(f"""
+        SELECT repo, path, lsn,
+               json_extract_string(value_json, '$.commit.id'),
+               json_extract_string(value_json, '$.lang'),
+               sha256(json_extract_string(value_json, '$.content'))
+        FROM (SELECT *, row_number() OVER (
+                  PARTITION BY repo, path ORDER BY lsn DESC) AS rn
+              FROM read_parquet('{parquet_dir}/*.parquet'))
+        WHERE rn = 1 AND op <> 'd'
+    """).fetchall())
+
+
+def test_sparse_key_path_reaches_sink(spark, tmp_path):
+    """One epoch in which ``lang`` is in about 2% of envelopes, absent from
+    the first and last: the registry must learn it from the rows that
+    carry it, and the sink must equal a DuckDB LWW over the same rows."""
+    from pyspark.sql import functions as F
+
     from kafka_connect_converter_json_spark.plans.registry import SchemaRegistry
 
-    hashes, snaps = [], []
-    for tag, pipelined in (("pipe", True), ("serial", False)):
-        root = str(tmp_path / f"tbl_{tag}")
-        sink = ingest(
-            spark, events, root, N_EVENTS, n_epochs=4, num_buckets=8,
-            registry=SchemaRegistry(), pipeline_observe=pipelined,
-        )
-        hashes.append(_state_hash(_read_state(sink)))
-        snaps.append(sink.meta().get("registry"))
-    assert hashes[0] == hashes[1] == _state_hash(oracle)
-    assert snaps[0] == snaps[1]  # registry observed in epoch order either way
+    n = 4800
+    src = str(tmp_path / "events")
+    _sparse_lang_events(spark, n, seed=11).write.parquet(src)
+    ev = spark.read.parquet(src)
+    first_last = ev.filter("value_json IS NOT NULL").agg(
+        F.min_by("value_json", "lsn"), F.max_by("value_json", "lsn")).collect()[0]
+    assert all('"lang"' not in v for v in first_last)
+
+    registry = SchemaRegistry()
+    sink = ingest(spark, ev, str(tmp_path / "tbl"), n, n_epochs=1, num_buckets=8,
+                  registry=registry)
+    want = _duckdb_lww(src)
+    assert sum(r[4] is not None for r in want) >= 5
+    got = sorted(map(tuple, sink.read().select(
+        "repo", "path", "lsn", "commit", "lang", F.sha2("content", 256)).collect()))
+    assert got == want
+    assert "lang" in registry.get("SourceChange").fieldNames()
+    assert sink.meta()["registry"] == registry.to_json()
+
+
+def test_steady_state_observation_submits_no_job(spark, events, tmp_path, monkeypatch):
+    """A one-epoch ``ingest`` onto a sink whose committed registry resolves
+    every key path never calls the sampler and observes with 0 jobs; the
+    first epoch of a fresh sink observes with one aggregation."""
+    from conftest import count_spark_jobs
+    from kafka_connect_converter_json_spark.plans.registry import SchemaRegistry
+    from kafka_connect_converter_json_spark.streaming import ingest as ingest_mod
+
+    sampled, observe_jobs = [], []
+    sampler, observe = ingest_mod.observe_envelope_samples_pruned, ingest_mod.observe_epoch
+
+    def counting_sampler(*args):
+        sampled.append(args[1:])
+        return sampler(*args)
+
+    def counting_observe(*args, **kwargs):
+        with count_spark_jobs(spark) as n:
+            out = observe(*args, **kwargs)
+        observe_jobs.append(n["jobs"])
+        return out
+
+    monkeypatch.setattr(ingest_mod, "observe_envelope_samples_pruned", counting_sampler)
+    monkeypatch.setattr(ingest_mod, "observe_epoch", counting_observe)
+    events.count()  # fill the fixture's cache outside the counted blocks
+    root = str(tmp_path / "steady")
+    ingest(spark, events, root, 1000, n_epochs=1, num_buckets=8)
+    # one aggregation; with AQE its partial-aggregate stage is its own job
+    assert len(sampled) == 1 and 0 < observe_jobs[0] <= 2
+
+    sampled.clear()
+    observe_jobs.clear()
+    # a restarted driver: the registry comes only from the committed snapshot
+    sink = ingest(spark, events, root, N_EVENTS, n_epochs=1, epoch_offset=1,
+                  lsn_lo=1000, num_buckets=8, registry=SchemaRegistry())
+    assert sampled == [] and observe_jobs == [0]
+    assert sorted(sink.committed_epochs()) == [0, 1]
+
+
+def test_corrupt_carrier_does_not_hide_key_path(spark, tmp_path):
+    """The lowest-LSN row carrying a path the registry lacks is
+    unparseable: the path is still learned from a later good row, whose
+    value reaches the sink."""
+    from kafka_connect_converter_json_spark.plans.registry import SchemaRegistry
+    from kafka_connect_converter_json_spark.streaming.stream import EVENT_SCHEMA
+
+    def row(lsn, path, value_json):
+        key = json.dumps({"repo": "r", "path": path})
+        return (lsn, "u", "SourceChange", value_json, key, "r", path, 0, lsn)
+
+    def env(path, **extra):
+        return json.dumps({"meta": {"repo": "r", "path": path}, "commit": {"id": f"c-{path}"},
+                           "content": f"body of {path}", **extra})
+
+    rows = [row(i, f"p{i}", env(f"p{i}")) for i in range(10)]
+    rows.append(row(10, "p10", '{"lang":"zz","meta":{"repo":"r",'))  # corrupt carrier
+    rows.append(row(11, "p11", env("p11", lang="py")))
+    ev = spark.createDataFrame(rows, EVENT_SCHEMA)
+
+    registry = SchemaRegistry()
+    root = str(tmp_path / "carrier")
+    ingest(spark, ev, root, 5, n_epochs=1, num_buckets=4)  # lsn 0..4: no lang
+    sink = ingest(spark, ev, root, 12, n_epochs=1, epoch_offset=1, lsn_lo=5,
+                  num_buckets=4, registry=registry, quarantine=True)
+    assert "lang" in registry.get("SourceChange").fieldNames()
+    state = {r["path"]: r["lang"] for r in sink.read().collect()}
+    assert state["p11"] == "py"
+    assert "p10" not in state and state["p9"] is None
+    quarantined = spark.read.parquet(root + "/quarantine/*").collect()
+    assert [r["lsn"] for r in quarantined] == [10]
+
+
+@pytest.mark.parametrize("field", ["commit.lsn", "commit.id"])
+def test_type_change_lands_after_identity_replay(spark, tmp_path, field):
+    """A field whose JSON type changes for good mid-stream. A field the
+    sink never reads (``commit.lsn``, a string from epoch 2 on) makes no
+    row corrupt. A key path (``commit.id``, a number in epochs 0-1, a
+    string after) quarantines the changed rows until an identity
+    ``replay_quarantine`` widens the registry from them. Either way the
+    sink ends equal to a DuckDB LWW over the same rows."""
+    from pyspark.sql import functions as F
+
+    from kafka_connect_converter_json_spark.streaming.ingest import replay_quarantine
+
+    n = 1200
+    ev = gen_events(spark, n, n_repos=10, paths_per_repo=20, seed=23)
+    if field == "commit.lsn":
+        changed = F.when(F.col("lsn") >= n // 2, F.regexp_replace(
+            "value_json", r'"lsn":(\d+)', '"lsn":"$1"'))
+    else:
+        changed = F.when(F.col("lsn") < n // 2, F.regexp_replace(
+            "value_json", F.lit(r'"id":"[0-9A-F]+"'),
+            F.concat(F.lit('"id":'), F.col("lsn").cast("string"))))
+    src = str(tmp_path / "events")
+    ev.withColumn("value_json", changed.otherwise(F.col("value_json"))).write.parquet(src)
+    root = str(tmp_path / "tbl")
+    sink = ingest(spark, spark.read.parquet(src), root, n, n_epochs=4, num_buckets=8,
+                  quarantine=True)
+    quarantined = spark.read.parquet(root + "/quarantine/*").count()
+    want = _duckdb_lww(src)
+
+    def state():
+        return sorted(map(tuple, sink.read().select(
+            "repo", "path", "lsn", "commit", "lang", F.sha2("content", 256)).collect()))
+
+    if field == "commit.lsn":
+        assert quarantined == 0 and state() == want
+    out = replay_quarantine(spark, root, lambda df: df)
+    assert out["replayed"] == quarantined and out["still_corrupt"] == 0
+    sink = sink.open(spark, root)
+    assert state() == want

@@ -61,6 +61,37 @@ def test_stream_ingest_matches_batch_replay(spark, source_dir, tmp_path):
     assert _state_hash(got.select(cols).toPandas()) == _state_hash(exp.select(cols).toPandas())
 
 
+def test_stream_learns_key_path_from_later_file(spark, tmp_path):
+    """``lang`` is absent from every envelope of the first file and from
+    the first row of every data file, and present in every tenth row of
+    the later file: the stream must learn it like the batch ``ingest`` of
+    the same events, not read it as null for the life of the query."""
+    from pyspark.sql import functions as F
+
+    from kafka_connect_converter_json_spark.streaming.ingest import ingest
+    from kafka_connect_converter_json_spark.streaming.sink import BucketedMergeSink
+
+    ev = gen_events(spark, N, n_repos=10, paths_per_repo=15, seed=23)
+    carries = (F.col("lsn") >= 600) & (F.col("lsn") % 10 == 3)
+    ev = ev.withColumn("value_json", F.when(carries, F.col("value_json")).otherwise(
+        F.regexp_replace("value_json", r'"lang":"[^"]*",', "")
+    )).select(*[f.name for f in EVENT_SCHEMA.fields])
+    src = tmp_path / "src"
+    ev.filter("lsn < 600").write.parquet(str(src / "p0"))
+    ev.filter("lsn >= 600").write.parquet(str(src / "p1"))
+
+    stream_ingest(spark, str(src / "*"), str(tmp_path / "tbl_stream"),
+                  str(tmp_path / "ckpt"), num_buckets=8)
+    got = BucketedMergeSink.open(spark, str(tmp_path / "tbl_stream")).read()
+    sink = ingest(spark, spark.read.parquet(str(src / "*")), str(tmp_path / "tbl_batch"),
+                  N, n_epochs=2, num_buckets=8)
+
+    cols = ["repo", "path", "lang", "content", "lsn"]
+    want = sorted(map(tuple, sink.read().select(*cols).collect()))
+    assert sorted(map(tuple, got.select(*cols).collect())) == want
+    assert any(r[2] is not None for r in want) and any(r[2] is None for r in want)
+
+
 def test_stream_restart_is_idempotent(spark, source_dir, tmp_path):
     root = str(tmp_path / "tbl_restart")
     ckpt = str(tmp_path / "ckpt_restart")

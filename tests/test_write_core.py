@@ -11,11 +11,11 @@ from pyspark.sql import functions as F
 
 from conftest import count_spark_jobs
 from kafka_connect_converter_json_spark.sources.cdc_gen import gen_events
+from kafka_connect_converter_json_spark.plans.registry import SchemaRegistry
 from kafka_connect_converter_json_spark.streaming.ingest import (
     convert_events,
     default_config,
-    infer_envelope_schemas_batch,
-    observe_envelope_samples,
+    observe_epoch,
 )
 from kafka_connect_converter_json_spark.streaming.sink import BucketedMergeSink
 
@@ -27,7 +27,7 @@ N_EPOCHS = 3
 def typed(spark):
     """400 converted CDC events, corrupt rows filtered as ingest does."""
     events = gen_events(spark, 400, n_repos=10, paths_per_repo=20, seed=5)
-    schema = infer_envelope_schemas_batch(spark, observe_envelope_samples(events))[0]
+    schema = observe_epoch(spark, events, default_config(), SchemaRegistry(), False)
     return convert_events(events, default_config(), "native", schema)
 
 
@@ -50,7 +50,9 @@ def _merge_jobs(spark, typed, root: str, mode: str) -> int:
     ungrouped = set(tracker.getJobIdsForGroup(None))
     with count_spark_jobs(spark) as n:
         sink.merge(typed.filter(~F.col("_corrupt")).drop("_corrupt"), epoch=0)
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # no job of the merge ran outside the group (the tracker may meanwhile
+    # drop old jobs past spark.ui.retainedJobs, so only new ids count)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
     return n["jobs"]
 
 
